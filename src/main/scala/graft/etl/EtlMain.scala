@@ -22,9 +22,10 @@ object EtlMain {
   def main(rawArgs: Array[String]): Unit = {
     // Engine AUTO-SELECT by corpus size (THROUGHPUT.md decision rule,
     // round 14): below 32 MB the fixed source machinery dominates and
-    // the typed binaryFile path holds the measured minima (same 32 MB
-    // threshold as runImpl's interpreted-mode switch); at or above it
-    // the DSv2 path wins the adjacent-pair majorities at 10k/50k games,
+    // the typed binaryFile path holds the measured minima (the ETL's
+    // interpreted-mode cut-off in Pipeline.executionMode happens to sit
+    // at the same size, but is its own measurement); at or above it the
+    // DSv2 path wins the adjacent-pair majorities at 10k/50k games,
     // holds the 200k floor (63.0 s vs 78.7 s, r14), and wins every
     // phase-isolated scan+parse probe ~2x. --typed / --v2 force a path.
     val args = rawArgs.filterNot(_.startsWith("--"))
@@ -74,7 +75,7 @@ object EtlMain {
       else Pipeline.run(spark, args(0), args(1))
       println(f"[etl] pipeline wall: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       Pipeline.TableNames.foreach { t =>
-        val n = spark.read.parquet(s"${args(1)}/$t").count()
+        val n = Pipeline.readTable(spark, args(1), t).count()
         println(s"[etl] $t: $n rows")
       }
       if (args.length > 2) {

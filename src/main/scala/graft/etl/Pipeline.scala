@@ -5,9 +5,10 @@ import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.model.ParsedGame
 
@@ -141,75 +142,130 @@ object Pipeline {
     )
   }
 
+  /** The lake's schema per table, derived once from [[tables]] over an
+    * empty parse, so writer and reader share one source: every column
+    * nullable (file sources write them so) and `dt` the trailing DATE
+    * partition column, exactly what a reader would infer.
+    */
+  def tableSchemas(spark: SparkSession): Map[String, StructType] = synchronized {
+    if (declared == null) {
+      import spark.implicits._
+      declared = tables(spark, spark.emptyDataset[ParsedGame])
+        .map { case (name, df) => name -> df.schema.toNullable }
+    }
+    declared
+  }
+  private var declared: Map[String, StructType] = _
+
+  /** Reads one lake table by its declared schema: no footer
+    * schema-inference job, and a table with no rows (no parquet files,
+    * e.g. a day without nagares) reads as 0 rows instead of failing
+    * with UNABLE_TO_INFER_SCHEMA.
+    */
+  def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(tableSchemas(spark)(name)).parquet(s"$dir/$name")
+
+  /** Raw mjlog bytes below which [[run]] runs interpreted: over the
+    * ETL's scan, window and 9 write plans, interpreted mode wins below
+    * ~32 MB of logs (THROUGHPUT.md, item 8).
+    */
+  val SmallLogBytes: Long = 32L << 20
+
+  /** Lake bytes a MahjongAnalytics report scans below which it runs
+    * interpreted. A parquet lake holds about a third of the log bytes it
+    * came from, and the reports turn over far sooner than the ETL: timed
+    * as a daily cycle runs them ([[ReportModeProbe]], THROUGHPUT.md),
+    * the window reports run faster with codegen from 0.3-0.5 MiB
+    * scanned, the join and aggregate ones from 0.5-1.7 MiB. With one
+    * cut-off at 1 MiB the six reports ran no slower than either fixed
+    * mode over 1k-2k game lakes and within 13% of all-codegen up to 16k
+    * games, where all-interpreted took 1.8x as long.
+    */
+  val SmallLakeBytes: Long = 1L << 20
+
+  /** Bytes `df` scans: its leaf relations' size stats, which the reads'
+    * FileIndex computed when it listed the files — no extra listing, no
+    * job. A leaf without a size estimate counts as Spark's default
+    * (huge) size, so it keeps codegen.
+    */
+  def scanBytes(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** The one execution-mode rule, for [[run]] and the MahjongAnalytics
+    * reports. Whole-stage codegen costs ~100-300 ms of Janino
+    * compilation per distinct plan, and Spark's codegen cache holds 100
+    * classes, so a daily ingest + report cycle over KB-to-MB inputs
+    * recompiles on every pass and never earns the cost back. Below
+    * `smallBelow` bytes of input ([[SmallLogBytes]] for the ETL,
+    * [[SmallLakeBytes]] for the reports) the plan runs interpreted; at
+    * real volume codegen pays for itself within one task. Sets the mode
+    * on `clone`, a session the entry point cloned for this call — never
+    * the caller's.
+    */
+  def executionMode(clone: SparkSession, inputBytes: BigInt, smallBelow: Long): Unit =
+    if (inputBytes < smallBelow) {
+      clone.conf.set("spark.sql.codegen.wholeStage", "false")
+      clone.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    }
+
   /** Full ETL: logDir → 9 Hive-partitioned parquet table dirs
-    * (`<outDir>/<table>/dt=YYYY-MM-DD/...`, reference layout E11).
+    * (`<outDir>/<table>/dt=YYYY-MM-DD/...`, reference layout E11), in
+    * the mode [[executionMode]] picks from the binaryFile scan's size.
     */
   def run(spark: SparkSession, logDir: String, outDir: String): Unit =
-    runImpl(spark, outDir) {
-      val raw = rawLogs(spark, logDir)
-      // Small-batch fast path: whole-stage codegen costs ~100-300 ms of
-      // Janino compilation per distinct plan — across the scan, window
-      // and 9 write plans that is seconds of fixed cost, which a
-      // KB-scale corpus never earns back. Interpreted mode wins below
-      // ~32 MB; at real volume codegen pays for itself within one task.
-      // The size comes from the scan's own FileIndex stats (no extra
-      // listing).
-      val smallInput =
-        raw.queryExecution.optimizedPlan.stats.sizeInBytes < (32L << 20)
-      (parseRaw(spark, raw), smallInput)
+    runImpl(spark, outDir) { s =>
+      val raw = rawLogs(s, logDir)
+      executionMode(s, scanBytes(raw), SmallLogBytes)
+      parseRaw(s, raw)
     }
 
   /** The same ETL sourced through the `mjlog` DataSource V2 instead of
     * the binaryFile scan + typed flatMap: one InputPartition per file,
     * identical downstream plan. Measured as its own THROUGHPUT row so
-    * the V2 path is held to the typed path's wall time.
+    * the V2 path is held to the typed path's wall time. Always runs
+    * with codegen: the measured V2 corpora are all ≥ 32 MB.
     */
   def runV2(spark: SparkSession, logDir: String, outDir: String): Unit =
-    runImpl(spark, outDir) {
-      import spark.implicits._
-      // no FileIndex size stats on the V2 relation; the measured corpora
-      // are all ≥ 32 MB so the small-batch interpreted mode never applies
-      (spark.read.format("mjlog").load(logDir).as[ParsedGame], false)
+    runImpl(spark, outDir) { s =>
+      import s.implicits._
+      s.read.format("mjlog").load(logDir).as[ParsedGame]
     }
 
+  /** Every conf below goes on a clone of the caller's session, so the
+    * caller's conf is never written and concurrent runs on one session
+    * cannot see each other's settings.
+    */
   private def runImpl(spark: SparkSession, outDir: String)
-                     (source: => (Dataset[ParsedGame], Boolean)): Unit = {
+                     (source: SparkSession => Dataset[ParsedGame]): Unit = {
+    val s = GraftShim.cloneSession(spark)
     // dynamic partition overwrite: re-running one date's logs replaces
     // only that date's dt= partitions — the idempotent per-date re-run
     // the reference gets by rewriting whole files (E13), without
     // touching unrelated days.
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // mjlogs are KB-sized: the default 4 MB open-cost estimate would
     // fragment the scan into one task per handful of files. The floor
     // keeps small corpora parallel — with the 64k estimate alone, a
     // 14 MB / 2000-file corpus bin-packs into 1-2 scan tasks and the
     // parse serializes onto 1-2 of the 32 cores
-    spark.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
+    s.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
     // pack-granularity knobs, overridable for ops tuning and the
     // THROUGHPUT.md bin-pack experiments: minPartitionNum drives
     // bytesPerCore in the split policy (both the binaryFile scan and
     // the mjlog DSv2 packer honor it), so raising it shrinks packs —
     // more, smaller scan tasks to absorb per-file parse-cost variance
-    spark.conf.set("spark.sql.files.minPartitionNum",
+    s.conf.set("spark.sql.files.minPartitionNum",
       sys.env.getOrElse("SPARK_GRAFT_MINPARTS",
-        (spark.sparkContext.defaultParallelism * 2).toString))
+        (s.sparkContext.defaultParallelism * 2).toString))
     sys.env.get("SPARK_GRAFT_MAXPART").foreach(v =>
-      spark.conf.set("spark.sql.files.maxPartitionBytes", v))
-    val (parsedSource, smallInput) = source
-    val prevCodegen = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    if (smallInput) {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
+      s.conf.set("spark.sql.files.maxPartitionBytes", v))
     // ONE dt-clustering shuffle for the whole pipeline: the id window
     // (partitionBy dt) reuses this partitioning instead of shuffling
     // again, and every projection stays narrow, so all 9 partitioned
     // writes inherit dt-clustered tasks (1 file per dt dir) with no
     // per-write repartition. At 100 TB: repartition(col("dt"),
     // col("game_id")) to spread a day over N tasks/files.
-    val parsed = parsedSource
+    val parsed = source(s)
       .repartition(col("dt")).cache()
     // the window-ranked kyoku intermediate feeds 5 of the 9 tables —
     // cache it so the explode+window runs once, not five times
@@ -252,15 +308,6 @@ object Pipeline {
     } finally {
       parsed.unpersist()
       kb.unpersist()
-      def restore(key: String, v: Option[String]): Unit = v match {
-        case Some(x) => spark.conf.set(key, x)
-        case None    => spark.conf.unset(key)
-      }
-      restore("spark.sql.sources.partitionOverwriteMode", prev)
-      if (smallInput) {
-        restore("spark.sql.codegen.wholeStage", prevCodegen)
-        restore("spark.sql.codegen.factoryMode", prevFactory)
-      }
     }
   }
 }

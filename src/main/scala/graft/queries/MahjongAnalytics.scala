@@ -1,8 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.etl.Pipeline
 import util.Q
 
 /** The reference's *actual* analytics workload: the Athena queries a
@@ -16,19 +18,38 @@ import util.Q
   * Input: `tablesDir` = output of Pipeline.run / StreamingPipeline.
   * Exercised in MahjongAnalyticsSpec over the fixture games; at scale
   * these run over the dt-partitioned lake with the same code.
+  *
+  * Each of the six reports is built on its own clone of the caller's
+  * session (`GraftShim.cloneSession`), reads the lake by its declared
+  * schema (`Pipeline.readTable`) and runs in the mode the one rule,
+  * `Pipeline.executionMode`, picks from the bytes it scans; the caller's
+  * conf is never written. The returned DataFrame belongs to that clone:
+  * conf the caller sets after the call does not apply to it, and a view
+  * made with `createOrReplaceTempView` is registered on the clone, not
+  * on the caller's session; `createOrReplaceGlobalTempView` is visible
+  * to both.
   */
 object MahjongAnalytics {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name")
+    Pipeline.readTable(spark, dir, name)
+
+  /** One report call: `q` built on a clone, in the clone's sized mode. */
+  private def report(spark: SparkSession)(q: SparkSession => DataFrame): DataFrame = {
+    val s = GraftShim.cloneSession(spark)
+    val df = q(s)
+    Pipeline.executionMode(s, Pipeline.scanBytes(df), Pipeline.SmallLakeBytes)
+    df
+  }
 
   /** Win rate (agari share of kyokus) per rule flag — the "win-rate by
     * rule" pattern: games ⋈ rules ⋈ kyokus ⟕ agaris.
+    * The result belongs to a private clone of `spark`: see the object doc.
     */
-  def winRateByRule(spark: SparkSession, dir: String): DataFrame = {
-    val kyokus = t(spark, dir, "kyokus").select(col("id"), col("game_id"))
-    val agaris = t(spark, dir, "agaris").select(col("kyoku_id")).distinct()
-    val rules = t(spark, dir, "rules")
+  def winRateByRule(spark: SparkSession, dir: String): DataFrame = report(spark) { s =>
+    val kyokus = t(s, dir, "kyokus").select(col("id"), col("game_id"))
+    val agaris = t(s, dir, "agaris").select(col("kyoku_id")).distinct()
+    val rules = t(s, dir, "rules")
       .select(col("game_id"), col("is_sanma"), col("aka_type"), col("level"))
     kyokus
       .join(broadcast(rules), "game_id")
@@ -41,22 +62,27 @@ object MahjongAnalytics {
       .orderBy("is_sanma", "aka_type", "level")
   }
 
-  /** Yaku frequency: explode agaris.yaku list<struct>. */
+  /** Yaku frequency: explode agaris.yaku list<struct>.
+    * The result belongs to a private clone of `spark`: see the object doc.
+    */
   def yakuFrequency(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "agaris")
-      .select(explode(col("yaku")).as("y"))
-      .groupBy(col("y.name").as("yaku"))
-      .agg(count(lit(1)).as("times"), sum(col("y.han")).as("total_han"))
-      .orderBy(col("times").desc, col("yaku"))
+    report(spark) { s =>
+      t(s, dir, "agaris")
+        .select(explode(col("yaku")).as("y"))
+        .groupBy(col("y.name").as("yaku"))
+        .agg(count(lit(1)).as("times"), sum(col("y.han")).as("total_han"))
+        .orderBy(col("times").desc, col("yaku"))
+    }
 
   /** Score progression per game: running seat scores over ordered
     * kyokus via window + agari score diffs.
+    * The result belongs to a private clone of `spark`: see the object doc.
     */
-  def scoreProgression(spark: SparkSession, dir: String): DataFrame = {
-    val k = t(spark, dir, "kyokus")
-    val diffs = t(spark, dir, "agaris")
+  def scoreProgression(spark: SparkSession, dir: String): DataFrame = report(spark) { s =>
+    val k = t(s, dir, "kyokus")
+    val diffs = t(s, dir, "agaris")
       .select(col("kyoku_id"), col("score_diff"))
-      .unionByName(t(spark, dir, "nagares").select(col("kyoku_id"), col("score_diff")))
+      .unionByName(t(s, dir, "nagares").select(col("kyoku_id"), col("score_diff")))
     val w = Window.partitionBy("game_id").orderBy("id")
     k.join(diffs, k("id") === diffs("kyoku_id"), "left")
       .select(col("game_id"), col("id"),
@@ -72,10 +98,11 @@ object MahjongAnalytics {
 
   /** Action sequences: per-kyoku ordered event stream with previous
     * action type (lag over seq — the reference's actions.seq ordering).
+    * The result belongs to a private clone of `spark`: see the object doc.
     */
-  def actionSequences(spark: SparkSession, dir: String): DataFrame = {
+  def actionSequences(spark: SparkSession, dir: String): DataFrame = report(spark) { s =>
     val w = Window.partitionBy("kyoku_id").orderBy("seq")
-    t(spark, dir, "actions")
+    t(s, dir, "actions")
       .select(col("kyoku_id"), col("seq"), col("player_index"),
               col("type"), col("pais"),
               lag(col("type"), 1).over(w).as("prev_type"))
@@ -84,10 +111,11 @@ object MahjongAnalytics {
 
   /** Player ranking by end-of-game points (game_scores.point desc),
     * rank within each game plus cross-game leaderboard.
+    * The result belongs to a private clone of `spark`: see the object doc.
     */
-  def playerRanking(spark: SparkSession, dir: String): DataFrame = {
-    val scores = t(spark, dir, "game_scores")
-    val players = t(spark, dir, "game_players")
+  def playerRanking(spark: SparkSession, dir: String): DataFrame = report(spark) { s =>
+    val scores = t(s, dir, "game_scores")
+    val players = t(s, dir, "game_players")
     val perGame = Window.partitionBy("game_id")
       .orderBy(col("point").desc, col("player_index").asc)
     scores
@@ -103,12 +131,13 @@ object MahjongAnalytics {
 
   /** Riichi success: riichi declarations (actions with the `*` marker)
     * joined to whether that player won the kyoku.
+    * The result belongs to a private clone of `spark`: see the object doc.
     */
-  def riichiOutcomes(spark: SparkSession, dir: String): DataFrame = {
-    val riichis = t(spark, dir, "actions")
+  def riichiOutcomes(spark: SparkSession, dir: String): DataFrame = report(spark) { s =>
+    val riichis = t(s, dir, "actions")
       .where(col("type") === "sutehai" && col("pais").endsWith("*"))
       .select(col("kyoku_id"), col("player_index"))
-    val wins = t(spark, dir, "agaris")
+    val wins = t(s, dir, "agaris")
       .select(col("kyoku_id"), col("who").as("player_index"), lit(1L).as("won"))
     riichis.join(wins, Seq("kyoku_id", "player_index"), "left")
       .groupBy("player_index")
@@ -199,7 +228,7 @@ object MahjongAnalytics {
     */
   val qMahjongYakuFreq: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    s.read.parquet(s"$dir/agaris")
+    t(s, dir, "agaris")
       .select(explode(col("yaku")).as("y"))
       .groupBy(col("y.name").as("yaku"))
       .agg(count(lit(1)).as("times"),
@@ -227,9 +256,9 @@ object MahjongAnalytics {
     */
   val qMahjongWinRate: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    val kyokus = s.read.parquet(s"$dir/kyokus").select(col("id"), col("game_id"))
-    val agaris = s.read.parquet(s"$dir/agaris").select(col("kyoku_id")).distinct()
-    val rules = s.read.parquet(s"$dir/rules")
+    val kyokus = t(s, dir, "kyokus").select(col("id"), col("game_id"))
+    val agaris = t(s, dir, "agaris").select(col("kyoku_id")).distinct()
+    val rules = t(s, dir, "rules")
       .select(col("game_id"), col("is_sanma"), col("aka_type"), col("level"))
     kyokus
       .join(broadcast(rules), "game_id")
@@ -274,8 +303,8 @@ object MahjongAnalytics {
     */
   val qMahjongRanking: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    val scores = s.read.parquet(s"$dir/game_scores")
-    val players = s.read.parquet(s"$dir/game_players")
+    val scores = t(s, dir, "game_scores")
+    val players = t(s, dir, "game_players")
     val perGame = Window.partitionBy("game_id")
       .orderBy(col("point").desc, col("player_index").asc)
     scores
@@ -320,7 +349,7 @@ object MahjongAnalytics {
     */
   val qMahjongSeatStats: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    s.read.parquet(s"$dir/agaris")
+    t(s, dir, "agaris")
       .groupBy(col("who").as("seat"))
       .agg(count(lit(1)).as("wins"),
         sum(col("score")).as("total_score"),
@@ -352,7 +381,7 @@ object MahjongAnalytics {
     */
   val qMahjongActionMix: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    s.read.parquet(s"$dir/actions")
+    t(s, dir, "actions")
       .groupBy(col("type"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("kyoku_id")).as("n_kyokus"),
@@ -384,10 +413,10 @@ object MahjongAnalytics {
     */
   val qMahjongRiichiRate: Q = (s, d) => {
     val dir = etlTablesDir(s, d)
-    val riichis = s.read.parquet(s"$dir/actions")
+    val riichis = t(s, dir, "actions")
       .where(col("type") === "sutehai" && col("pais").endsWith("*"))
       .select(col("kyoku_id"), col("player_index"))
-    val wins = s.read.parquet(s"$dir/agaris")
+    val wins = t(s, dir, "agaris")
       .select(col("kyoku_id"), col("who").as("player_index")).distinct()
       .withColumn("won", lit(1L))
     riichis.join(wins, Seq("kyoku_id", "player_index"), "left")
@@ -434,7 +463,7 @@ object MahjongAnalytics {
     array_join(transform(c, e => e.cast("string")), ",")
 
   private def canonDf(s: SparkSession, root: String, tbl: String): DataFrame = {
-    def rd(t: String) = s.read.parquet(s"$root/$t")
+    def rd(name: String) = t(s, root, name)
     val (df, canon): (DataFrame, Column) = tbl match {
       case "games" =>
         (rd("games"), concat_ws("|", col("id"), col("tonpu"), col("ariari"),

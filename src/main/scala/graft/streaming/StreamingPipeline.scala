@@ -35,9 +35,9 @@ object StreamingPipeline {
     val path = new java.io.File(s"$outDir/kyokus")
     if (!path.exists()) Map.empty
     else {
-      // partition-column inference reads dt= values back as DATE
-      val df = spark.read.parquet(path.toString)
-      df.groupBy(col("dt").cast("string").as("dt"))
+      // the declared schema types dt as DATE and needs no inference job
+      Pipeline.readTable(spark, outDir, "kyokus")
+        .groupBy(col("dt").cast("string").as("dt"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }

@@ -1,7 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Pipeline
@@ -17,6 +21,22 @@ class MahjongAnalyticsSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft_analytics_").toString
     Pipeline.run(spark, getClass.getResource("/mjlog").getPath, out)
     out
+  }
+
+  private val reports: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "winRateByRule" -> MahjongAnalytics.winRateByRule,
+    "yakuFrequency" -> MahjongAnalytics.yakuFrequency,
+    "scoreProgression" -> MahjongAnalytics.scoreProgression,
+    "actionSequences" -> MahjongAnalytics.actionSequences,
+    "playerRanking" -> MahjongAnalytics.playerRanking,
+    "riichiOutcomes" -> MahjongAnalytics.riichiOutcomes)
+
+  /** Whole-stage codegen stages in `df`'s final plan, after running it. */
+  private def codegenStages(df: DataFrame): Int = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }.size
   }
 
   test("win rate by rule flags") {
@@ -178,5 +198,86 @@ class MahjongAnalyticsSpec extends AnyFunSuite {
       assert(r.getAs[Boolean]("parity") == expected,
         s"perturbation detection wrong at ${r.getString(0)}/${r.getString(1)}: $r")
     }
+  }
+
+  test("every report runs over a lake whose nagares table has no files") {
+    // the first fixture game ends its only kyoku in an agari
+    val logs = Files.createTempDirectory("graft_no_nagare_")
+    val day = Files.createDirectories(logs.resolve("20240101"))
+    Files.copy(Paths.get(getClass.getResource(
+      "/mjlog/20240101/2024010100gm-0001.xml").toURI), day.resolve("g.xml"))
+    val lake = Files.createTempDirectory("graft_no_nagare_lake_").toString
+    Pipeline.run(spark, logs.toString, lake)
+    val nagares = Paths.get(lake, "nagares")
+    assert(Files.isDirectory(nagares))
+    assert(!Files.walk(nagares).anyMatch(_.toString.endsWith(".parquet")))
+    // schema inference has nothing to read; the declared schema does not need it
+    intercept[AnalysisException](spark.read.parquet(nagares.toString))
+    assert(Pipeline.readTable(spark, lake, "nagares").count() == 0)
+    reports.foreach { case (name, r) =>
+      assert(r(spark, lake).collect().nonEmpty, name)
+    }
+    assert(MahjongAnalytics.scoreProgression(spark, lake).count() == 4)
+  }
+
+  test("each report returns the same schema and rows, in order, interpreted " +
+       "as with codegen") {
+    reports.foreach { case (name, r) =>
+      val interpreted = r(spark, dir)
+      // the same report on its own clone with the codegen confs removed
+      // before anything was planned: it plans as a codegen session does
+      val codegen = r(spark, dir)
+      Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+        .foreach(codegen.sparkSession.conf.unset)
+      assert(codegenStages(interpreted) == 0, name)
+      assert(codegenStages(codegen) > 0, name)
+      assert(interpreted.schema == codegen.schema, name)
+      assert(interpreted.collect().toSeq == codegen.collect().toSeq, name)
+    }
+  }
+
+  test("the execution-mode rule keeps codegen from each cut-off up") {
+    def stagesAt(bytes: BigInt, smallBelow: Long): Int = {
+      val s = GraftShim.cloneSession(spark)
+      Pipeline.executionMode(s, bytes, smallBelow)
+      codegenStages(Pipeline.readTable(s, dir, "game_scores")
+        .groupBy(col("player_index")).count())
+    }
+    for (cut <- Seq(Pipeline.SmallLogBytes, Pipeline.SmallLakeBytes)) {
+      assert(stagesAt(cut, cut) > 0, cut)
+      assert(stagesAt(cut - 1, cut) == 0, cut)
+    }
+    // the fixture lake is far below the reports' cut-off
+    reports.foreach { case (name, r) =>
+      assert(Pipeline.scanBytes(r(spark, dir)) < Pipeline.SmallLakeBytes, name)
+    }
+  }
+
+  test("a report's result belongs to a private clone of the caller's session") {
+    val caller = spark.newSession()
+    val df = MahjongAnalytics.yakuFrequency(caller, dir)
+    assert(df.sparkSession ne caller)
+    assert(df.sparkSession.conf.get("spark.sql.codegen.wholeStage") == "false")
+    assert(caller.conf.get("spark.sql.codegen.wholeStage") == "true")
+    // a temp view lands on the clone; a global temp view reaches the caller
+    df.createOrReplaceTempView("yaku_freq_private")
+    assert(!caller.catalog.tableExists("yaku_freq_private"))
+    df.createOrReplaceGlobalTempView("yaku_freq_shared")
+    assert(caller.table("global_temp.yaku_freq_shared").collect().toSeq ==
+      df.collect().toSeq)
+    spark.catalog.dropGlobalTempView("yaku_freq_shared")
+  }
+
+  test("session clones share one executor class loader, so calls reuse " +
+       "each other's compiled classes") {
+    def taskLoader(s: SparkSession): Int = {
+      import s.implicits._
+      s.range(1).map(_ => System.identityHashCode(
+        Thread.currentThread().getContextClassLoader)).head()
+    }
+    val caller = spark.newSession()
+    val clones = Seq.fill(2)(GraftShim.cloneSession(caller))
+    assert(taskLoader(clones(0)) == taskLoader(clones(1)))
+    assert(caller.conf.get("spark.sql.artifact.isolation.enabled") == "true")
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Pipeline
+import graft.queries.MahjongAnalytics
+import graft.streaming.StreamingPipeline
 
 /** End-to-end ETL test (SURVEY.md §5.2.5): fixture XML dir → full
   * pipeline → read back all 9 tables → schema, id-scheme and
@@ -116,5 +118,57 @@ class PipelineSpec extends AnyFunSuite {
       .orderBy("player_index").select("point").collect()
       .map(_.getDecimal(0).toPlainString)
     assert(pts.toSeq == Seq("32.7", "-16.3", "5.0", "-21.4"))
+  }
+
+  /** A log dir holding only the fixture day `yyyymmdd`. */
+  private def dayLogs(yyyymmdd: String): String = {
+    val src = Paths.get(getClass.getResource(s"/mjlog/$yyyymmdd").toURI)
+    val root = Files.createTempDirectory("graft_day_")
+    Files.createDirectories(root.resolve(yyyymmdd))
+    Files.list(src).forEach(f => Files.copy(f, root.resolve(yyyymmdd).resolve(f.getFileName)))
+    root.toString
+  }
+
+  test("concurrent runs for different days keep both days in all 9 tables, " +
+       "and neither runs nor reports write the caller's conf") {
+    // both days have rows in every table, nagares included
+    val days = Seq("20240101", "20240103")
+    val logs = days.map(dayLogs)
+    val lake = Files.createTempDirectory("graft_etl_concurrent_").toString
+    // a caller whose conf no earlier test has touched
+    val caller = spark.newSession()
+    val before = caller.conf.getAll.toSet
+    // conf entries the caller gained, lost or changed since `before`
+    def written = { val now = caller.conf.getAll.toSet; (now diff before) ++ (before diff now) }
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    logs.map(l => Future(Pipeline.run(caller, l, lake)))
+      .foreach(Await.result(_, Duration.Inf))
+    assert(written.isEmpty, "after Pipeline.run")
+    for (t <- Pipeline.TableNames) {
+      val dts = Pipeline.readTable(spark, lake, t)
+        .select(col("dt").cast("string")).distinct().collect().map(_.getString(0)).sorted
+      assert(dts.toSeq == Seq("2024-01-01", "2024-01-03"), s"$t lost a day")
+    }
+    val reports = Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+      MahjongAnalytics.winRateByRule, MahjongAnalytics.yakuFrequency,
+      MahjongAnalytics.scoreProgression, MahjongAnalytics.actionSequences,
+      MahjongAnalytics.playerRanking, MahjongAnalytics.riichiOutcomes)
+    reports.zipWithIndex.foreach { case (r, i) =>
+      r(caller, lake).collect()
+      assert(written.isEmpty, s"after report $i")
+    }
+  }
+
+  test("declared table schemas equal what Spark infers from batch and streaming lakes") {
+    val stream = Files.createTempDirectory("graft_etl_stream_").toString
+    StreamingPipeline.runAvailable(spark, getClass.getResource("/mjlog").getPath,
+      stream, Files.createTempDirectory("graft_etl_ckpt_").toString)
+    for (lake <- Seq(outDir, stream); t <- Pipeline.TableNames) {
+      val inferred = spark.read.parquet(s"$lake/$t").schema
+      assert(Pipeline.tableSchemas(spark)(t) == inferred, s"$lake/$t")
+      assert(Pipeline.readTable(spark, lake, t).schema == inferred, s"$lake/$t")
+    }
   }
 }
