@@ -11,6 +11,14 @@ import org.apache.spark.sql.functions._
   * would point at a `dt=`-partitioned lake (reference layout:
   * scrape.py:613-622) and the same code works unchanged — partition
   * pruning is handled by the optimizer, not by the loaders.
+  *
+  * Two tables TESTDATA.md does not list feed the LlmOps keys:
+  *  - `documents` (doc_id BIGINT, text, lang, source STRING, n_chars
+  *    BIGINT) and
+  *  - `embeddings` (vec_id BIGINT, embedding ARRAY<FLOAT> of 64 dims,
+  *    label INT).
+  * They hold 500 and 500 rows at sf0.001 and sf0.01 (258 KB on disk
+  * together), and 5000 and 2000 rows at sf0.1 (1.39 MB together).
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

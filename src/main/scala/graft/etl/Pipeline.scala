@@ -180,6 +180,12 @@ object Pipeline {
     * cut-off at 1 MiB the six reports ran no slower than either fixed
     * mode over 1k-2k game lakes and within 13% of all-codegen up to 16k
     * games, where all-interpreted took 1.8x as long.
+    *
+    * The LlmOps entries use the same cut-off on their two tables'
+    * on-disk bytes: over 14 keys cycled as a bench runs them,
+    * interpreted won up to ~1 MiB (25-30% less time at 0.2-0.4 MiB), the
+    * two modes tied at 1-1.5 MiB, and codegen won from 1.8 MiB (36% less
+    * time at 3.6 MiB) ([[ReportModeProbe]] `llm`, THROUGHPUT.md).
     */
   val SmallLakeBytes: Long = 1L << 20
 
@@ -191,16 +197,19 @@ object Pipeline {
   def scanBytes(df: DataFrame): BigInt =
     df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
 
-  /** The one execution-mode rule, for [[run]] and the MahjongAnalytics
-    * reports. Whole-stage codegen costs ~100-300 ms of Janino
-    * compilation per distinct plan, and Spark's codegen cache holds 100
-    * classes, so a daily ingest + report cycle over KB-to-MB inputs
+  /** The one execution-mode rule. Whole-stage codegen costs ~100-300 ms
+    * of Janino compilation per distinct plan, and Spark's codegen cache
+    * holds 100 classes, so a cycle of calls over KB-to-MB inputs
     * recompiles on every pass and never earns the cost back. Below
-    * `smallBelow` bytes of input ([[SmallLogBytes]] for the ETL,
-    * [[SmallLakeBytes]] for the reports) the plan runs interpreted; at
-    * real volume codegen pays for itself within one task. Sets the mode
-    * on `clone`, a session the entry point cloned for this call — never
-    * the caller's.
+    * `smallBelow` bytes of input the plan runs interpreted; at real
+    * volume codegen pays for itself within one task. Its three callers:
+    *  - [[run]], sized by the binaryFile scan, against [[SmallLogBytes]];
+    *  - the six public MahjongAnalytics reports, sized by the lake bytes
+    *    they scan ([[scanBytes]]), against [[SmallLakeBytes]];
+    *  - every `LlmOps.entries` key, sized by the on-disk bytes of its
+    *    two tables (`LlmOps.tableBytes`), against [[SmallLakeBytes]].
+    * Sets the mode on `clone`, a session the entry point cloned for this
+    * call — never the caller's.
     */
   def executionMode(clone: SparkSession, inputBytes: BigInt, smallBelow: Long): Unit =
     if (inputBytes < smallBelow) {

@@ -261,7 +261,7 @@ object Analytics {
     * event-cardinality ratio.
     */
   val qGraphPagerank: Q = (s, d) => {
-    // memoized per (session, dir), the [[LlmOps]] chainArtifact pattern:
+    // memoized per (context, dir), the [[LlmOps]] chainArtifact pattern:
     // r13's eager localCheckpoint + unpersist correctly released the
     // per-invocation edge/node caches but made every rep rebuild the
     // transition graph from raw events (the r14 ×4.45 bench regression);
@@ -269,7 +269,7 @@ object Analytics {
     // checkpoint keeps the cache-release goal AND the rep cost at a
     // checkpoint scan. The corpus for a dir is immutable within a JVM
     // run, same contract as the dedup chain cache.
-    pagerankCache.computeIfAbsent((System.identityHashCode(s), d), _ =>
+    pagerankCache(s, d)(
       Seeds.timed("graph_pagerank") {
         val (plan, deps) = graphPagerankPlan(s, d)
         val out = plan.localCheckpoint(true)
@@ -278,8 +278,7 @@ object Analytics {
       }).orderBy("node")
   }
 
-  private val pagerankCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), org.apache.spark.sql.DataFrame]
+  private val pagerankCache = new ContextMemo[String]
 
   /** Declarative form of [[qGraphPagerank]] before the eager checkpoint
     * — PlanSpec asserts the persisted-edge-reuse shape on THIS plan.

@@ -1,11 +1,14 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.etl.Pipeline
 import util._
 
 /** LLM-training-data pipeline operators over `documents` / `embeddings`
@@ -22,6 +25,17 @@ import util._
   *    TakeOrderedAndProject (no global sort); the IVF variant prunes the
   *    scan to the probed centroid buckets — at scale the buckets are the
   *    partitioning key so a probe touches a few partitions, not all.
+  *
+  * Each [[entries]] key runs on its own clone of the caller's session
+  * (`GraftShim.cloneSession`), in the mode the one rule,
+  * `Pipeline.executionMode`, picks from the on-disk bytes of the
+  * `documents` and `embeddings` tables ([[tableBytes]]); the caller's
+  * conf is never written. The returned DataFrame belongs to that clone:
+  * conf the caller sets after the call does not apply to it, and a view
+  * made with `createOrReplaceTempView` is registered on the clone, not
+  * on the caller's session; `createOrReplaceGlobalTempView` is visible
+  * to both. The `qXxx` vals themselves run on the session they are
+  * given.
   */
 object LlmOps {
 
@@ -447,7 +461,7 @@ object LlmOps {
     */
   val qDedupLshVerify: Q = (s, d) => lshVerifiedPairs(s, d).orderBy("doc_a", "doc_b")
 
-  /** Near-dup chain artifacts, memoized per (session, data dir).
+  /** Near-dup chain artifacts, memoized per (SparkContext, data dir).
     *
     * In a production dedup pipeline the verified-pair table and the
     * component labels are PERSISTED ARTIFACTS of a corpus snapshot —
@@ -462,18 +476,18 @@ object LlmOps {
     * once-per-dir seeding rationale as the bucketed-at-rest layouts.
     *
     * Entries are EAGER localCheckpoints: small (∝ dup rate, not corpus
-    * size), lineage-free, and dropped with the session. Keyed by
-    * (session identity, dir) so tests on fixture dirs and the gate on
-    * sf dirs never collide; the corpus for a dir is immutable within a
-    * JVM run (driver-written testdata / fresh temp dirs per fixture).
+    * size), lineage-free, and dropped with the context. Keyed by
+    * (SparkContext, dir) — see [[ContextMemo]] — so the clone each
+    * [[entries]] call runs on reuses the chain, and tests on fixture
+    * dirs and the gate on sf dirs never collide; the corpus for a dir is
+    * immutable within a JVM run (driver-written testdata / fresh temp
+    * dirs per fixture).
     */
-  private val chainCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, String), DataFrame]
+  private val chainCache = new ContextMemo[(String, String)]
 
   private def chainArtifact(s: SparkSession, d: String, kind: String)
                            (build: => DataFrame): DataFrame =
-    chainCache.computeIfAbsent((System.identityHashCode(s), d, kind),
-      _ => Seeds.timed(s"chain_$kind")(build))
+    chainCache(s, (d, kind))(Seeds.timed(s"chain_$kind")(build))
 
   /** LSH-candidate → exact-verify pair pipeline shared by
     * [[qDedupLshVerify]] (emits the pairs) and [[clusterLabels]]
@@ -3350,7 +3364,32 @@ object LlmOps {
 
   // ------------------------------------------------------------ registry
 
-  val entries: Map[String, Q] = Map(
+  /** On-disk bytes of the `documents` and `embeddings` tables under `d`,
+    * from a file-system content summary: no Spark job, no schema
+    * inference. A missing table counts 0 bytes.
+    */
+  private[graft] def tableBytes(s: SparkSession, d: String): Long =
+    Seq("documents", "embeddings").map { t =>
+      val p = new Path(s"$d/$t.parquet")
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    }.sum
+
+  /** One [[entries]] call: `q` on a clone of the caller's session, in the
+    * mode [[Pipeline.executionMode]] picks from [[tableBytes]]. The mode
+    * is set before the body runs because several bodies run eager jobs
+    * while they build the result (the chain memo's checkpoints, the PQ
+    * codebook collect and seed write, q_embed_mmr's checkpoint and
+    * collect), and a checkpointed leaf would size as huge afterwards.
+    */
+  private def onClone(q: Q): Q = (s, d) => {
+    val c = GraftShim.cloneSession(s)
+    Pipeline.executionMode(c, tableBytes(s, d), Pipeline.SmallLakeBytes)
+    q(c, d)
+  }
+
+  /** The keys' bodies, each run on the session it is given. */
+  private[graft] val bodies: Map[String, Q] = Map(
     "q_embed_ann_recall" -> qEmbedAnnRecall,
     "q_sim_batch_topk"   -> qSimBatchTopk,
     "q_embed_mmr"        -> qEmbedMmr,
@@ -3399,6 +3438,8 @@ object LlmOps {
     "q_sim_knn_join"     -> qSimKnnJoin,
     "q_sim_knn_join_ivf" -> qSimKnnJoinIvf
   )
+
+  val entries: Map[String, Q] = bodies.map { case (k, q) => k -> onClone(q) }
 
   val oracles: Map[String, String] = Map(
     "q_dedup_exact"   -> qDedupExactSql,

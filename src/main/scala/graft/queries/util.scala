@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -85,5 +87,27 @@ object Seeds {
   def measuredSec: Double = {
     import scala.jdk.CollectionConverters._
     accMeasured.asScala.values.map(_.doubleValue).sum
+  }
+}
+
+/** In-JVM memo of small eager artifacts (localCheckpoints) a query
+  * builds once and serves on later calls, keyed by the SparkContext that
+  * holds their blocks plus `K` (data dir, artifact kind). The context,
+  * not the session, is the key: every session and clone on one context
+  * can read the blocks, so the per-call clones of one caller share one
+  * build, and no identity-hash collision can hand a session another
+  * session's entry. A hit is served on the calling session, so the
+  * caller's conf plans whatever it builds on top. An entry on a stopped
+  * context is dropped, never returned — its blocks went with the
+  * context.
+  */
+final class ContextMemo[K] {
+  private val memo =
+    new java.util.concurrent.ConcurrentHashMap[(SparkContext, K), DataFrame]
+
+  def apply(s: SparkSession, key: K)(build: => DataFrame): DataFrame = {
+    memo.keySet.removeIf(_._1.isStopped)
+    val df = memo.computeIfAbsent((s.sparkContext, key), _ => build)
+    if (df.sparkSession eq s) df else GraftShim.ofRows(s, df.queryExecution.analyzed)
   }
 }

@@ -1,11 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.LlmOps
+import graft.etl.Pipeline
+import graft.queries.{LlmOps, Seeds}
 
 /** Unit tests for the non-oracled LLM ops: planted near-duplicates for
   * MinHash-LSH and SimHash, ANN recall vs brute force, language-ID and
@@ -768,5 +773,95 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(math.abs(recall - hits / 10.0) < 1e-9)
     // nprobe 4/16 should still find most of the true top-10 here
     assert(hits >= 5L, s"IVF recall collapsed: $hits/10")
+  }
+
+  /** Whole-stage codegen stages in `df`'s final plan, after running it. */
+  private def codegenStages(df: DataFrame): Int = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }.size
+  }
+
+  /** Key `k`'s body on a clone of `caller` that runs with codegen. */
+  private def withCodegen(caller: SparkSession, k: String): DataFrame = {
+    val c = GraftShim.cloneSession(caller)
+    c.conf.set("spark.sql.codegen.wholeStage", "true")
+    c.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    LlmOps.bodies(k)(c, sf)
+  }
+
+  test("every entry returns the same schema and rows, in order, interpreted " +
+       "as with codegen, and never writes the caller's conf") {
+    assert(LlmOps.tableBytes(spark, sf) < Pipeline.SmallLakeBytes)
+    // a caller whose conf no earlier test has touched
+    val caller = spark.newSession()
+    val before = caller.conf.getAll.toSet
+    // conf entries the caller gained, lost or changed since `before`
+    def written = { val now = caller.conf.getAll.toSet; (now diff before) ++ (before diff now) }
+    var codegen = 0
+    LlmOps.entries.keys.toSeq.sorted.foreach { k =>
+      val interpreted = LlmOps.entries(k)(caller, sf)
+      assert(written.isEmpty, s"$k wrote the caller's conf")
+      assert(interpreted.sparkSession ne caller, k)
+      assert(codegenStages(interpreted) == 0, s"$k ran codegen below the cut-off")
+      val compiled = withCodegen(caller, k)
+      codegen += codegenStages(compiled)
+      assert(interpreted.schema == compiled.schema, k)
+      // exact and ordered, as the oracle compares
+      assert(interpreted.collect().toSeq == compiled.collect().toSeq, k)
+    }
+    assert(codegen > 0)
+    assert(written.isEmpty)
+  }
+
+  test("the execution-mode rule keeps an entry's codegen at the cut-off and " +
+       "drops it one byte below") {
+    def stagesAt(bytes: BigInt): Int = {
+      val c = GraftShim.cloneSession(spark)
+      Pipeline.executionMode(c, bytes, Pipeline.SmallLakeBytes)
+      codegenStages(LlmOps.bodies("q_dedup_exact")(c, sf))
+    }
+    assert(stagesAt(Pipeline.SmallLakeBytes) > 0)
+    assert(stagesAt(Pipeline.SmallLakeBytes - 1) == 0)
+  }
+
+  test("the entries' size is the on-disk bytes of both tables; a missing " +
+       "table counts 0") {
+    def onDisk(p: Path): Long =
+      if (!Files.exists(p)) 0L
+      else {
+        val s = Files.walk(p)
+        try s.filter(f => Files.isRegularFile(f) && !f.getFileName.toString.endsWith(".crc"))
+          .mapToLong(f => Files.size(f)).sum()
+        finally s.close()
+      }
+    val tables = Seq("documents", "embeddings")
+    assert(LlmOps.tableBytes(spark, sf) ==
+      tables.map(t => onDisk(Paths.get(sf, s"$t.parquet"))).sum)
+    // plantedDir holds documents only, written as a directory of parts
+    assert(!Files.exists(Paths.get(plantedDir, "embeddings.parquet")))
+    assert(LlmOps.tableBytes(spark, plantedDir) ==
+      onDisk(Paths.get(plantedDir, "documents.parquet")))
+    assert(LlmOps.tableBytes(spark, plantedDir) > 0)
+    assert(LlmOps.tableBytes(spark, Files.createTempDirectory("graft_none_").toString) == 0L)
+  }
+
+  test("two entry calls on one caller session build the near-dup chain once") {
+    val dir = Files.createTempDirectory("graft_chain_once_").toString
+    spark.read.parquet(s"$plantedDir/documents.parquet")
+      .write.parquet(s"$dir/documents.parquet")
+    val caller = spark.newSession()
+    def built = Seq("chain_pairs", "chain_labels").map(Seeds.breakdown.getOrElse(_, -1.0))
+    val before = built
+    val first = LlmOps.entries("q_dedup_near_clusters")(caller, dir)
+    val afterFirst = built
+    assert(afterFirst.zip(before).forall { case (a, b) => a > b }, "the first call built no chain")
+    val second = LlmOps.entries("q_dedup_near_clusters")(caller, dir)
+    assert(built == afterFirst, "the second call rebuilt the chain")
+    // each call's result belongs to its own clone, the memo hit included
+    assert(Set(first.sparkSession, second.sparkSession, caller).size == 3)
+    assert(first.collect().toSeq == second.collect().toSeq)
+    assert(first.collect().nonEmpty)
   }
 }
