@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
   /** 1-minute load average, read at suite start and end so the JSON
@@ -15,14 +14,7 @@ object Bench {
     val loadStart = load1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen/parquet-reader paths once so initialization
     // cost doesn't land on whichever query happens to run first; the
@@ -95,15 +87,7 @@ object Bench {
         }.sorted
         name -> (times(times.length / 2), times.head, err)
       }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import GraftSession.jstr
     val ok = results.filter { case (_, (_, _, err)) => err.isEmpty }
     val failed = results.collect { case (k, (_, _, Some(e))) => k -> e }
     val qs = ok.map { case (k, (med, _, _)) => jstr(k) + ":" + med }

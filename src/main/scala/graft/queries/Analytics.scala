@@ -665,7 +665,7 @@ object Analytics {
     */
   val qScanMergeSchema: Q = (s, d) => {
     val tmp = Relational.scratchDir("evolve", d)
-    seedOnceLocal("evolve", tmp) {
+    Seeds.once("evolve", tmp) {
       val o = Tables.orders(s, d)
       o.where(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -674,9 +674,6 @@ object Analytics {
         .select(col("o_orderkey"), col("o_totalprice"),
           (col("o_totalprice") / lit(1000.0)).as("priority_score"))
         .write.mode("overwrite").parquet(s"$tmp/v2")
-      // mark the two-generation seed complete as a unit
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(tmp, "_SEEDED"))
     }
     s.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
       .groupBy((col("o_orderkey") % 10).as("bucket"))
@@ -685,11 +682,6 @@ object Analytics {
         dsum(col("o_totalprice")).as("sum_price"))
       .orderBy("bucket")
   }
-
-  private def seedOnceLocal(prefix: String, dir: String)(write: => Unit): Unit =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SEEDED")))
-      // label = the scratch prefix passed through, same as seedOnce
-      Seeds.timed(prefix)(write)
 
   val qScanMergeSchemaSql: String =
     """SELECT o_orderkey % 10 AS bucket, count(*) AS n,

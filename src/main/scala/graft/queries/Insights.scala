@@ -516,8 +516,8 @@ object Insights {
   /** Incremental dedup of a NEW batch against a PERSISTED corpus index —
     * the nightly-ingest pattern: yesterday's corpus (doc_id % 10 != 0)
     * has its 2-gram inverted index and per-doc gram counts materialized
-    * ONCE to scratch parquet (`_SEEDED`-guarded, standing in for the
-    * warehouse's signature store); today's batch (doc_id % 10 == 0)
+    * ONCE to scratch parquet (standing in for the warehouse's signature
+    * store); today's batch (doc_id % 10 == 0)
     * computes grams for ITSELF ONLY, probes the stored index with one
     * equi-join on the gram, and reports exact-Jaccard ≥ 0.5 matches.
     * The oracle recomputes everything from `documents` directly, so the
@@ -557,14 +557,11 @@ object Insights {
         .toDF("doc_id", "gram")
     val docs = Tables.documents(s, d)
     val tmp = Relational.scratchDir("dedup_index", d)
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(tmp, "_SEEDED"))) Seeds.timed("dedup_index") {
+    Seeds.once("dedup_index", tmp) {
       val ix = grams(docs.where(col("doc_id") % 10 =!= 0))
       ix.write.mode("overwrite").parquet(s"$tmp/grams")
       ix.groupBy("doc_id").agg(count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$tmp/sizes")
-      java.nio.file.Files.createFile(
-        java.nio.file.Paths.get(tmp, "_SEEDED"))
     }
     // referenced twice (probe + its own sizes) — cache the batch's
     // gram stream so the typed flatMap runs once per job
@@ -865,8 +862,7 @@ object Insights {
     */
   val qScanQuarantine: Q = (s, d) => {
     val dir = graft.queries.Scratch.path("quarantine_lines", d)
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "_SUCCESS"))) {
+    Seeds.once("quarantine_lines", dir) {
       Tables.orders(s, d)
         .select(when(col("o_orderkey") % 37 === 0,
             concat(lit("{\"k\":"), col("o_orderkey"), lit(",\"p\":")))

@@ -161,18 +161,14 @@ object MahjongAnalytics {
     */
   private def corpusDir(d: String): String = {
     val logs = Relational.scratchDir("mjgate2_logs", d)
-    val marker = java.nio.file.Paths.get(logs, "_CORPUS")
-    this.synchronized {
-      if (!java.nio.file.Files.exists(marker)) Seeds.timed("mjgate2_corpus") {
-        graft.etl.LogGen.main(Array(logs, "3", "30", "20260817"))
-        java.nio.file.Files.createFile(marker)
-      }
+    Seeds.once("mjgate2_corpus", logs) {
+      graft.etl.LogGen.main(Array(logs, "3", "30", "20260817"))
     }
     logs
   }
 
   /** Seed the corpus and run the FULL batch pipeline over it, once per
-    * (session, data dir). Returns the 9-table output dir. Before r16
+    * data dir. Returns the 9-table output dir. Before r16
     * the ETL output was contract- and referential-integrity-tested
     * (TablesContractSpec) but never cross-engine-hashed; the gate keys
     * below read the pipeline's parquet back and DuckDB reads the SAME
@@ -181,13 +177,7 @@ object MahjongAnalytics {
   private[graft] def etlTablesDir(spark: SparkSession, d: String): String = {
     val logs = corpusDir(d)
     val out = Scratch.path("mjgate2_tables", d)
-    val seeded = java.nio.file.Paths.get(out, "_SEEDED")
-    this.synchronized {
-      if (!java.nio.file.Files.exists(seeded)) Seeds.timed("mjgate2_etl") {
-        graft.etl.Pipeline.run(spark, logs, out)
-        java.nio.file.Files.createFile(seeded)
-      }
-    }
+    Seeds.once("mjgate2_etl", out)(graft.etl.Pipeline.run(spark, logs, out))
     out
   }
 
@@ -201,13 +191,9 @@ object MahjongAnalytics {
   private[graft] def etlStreamTablesDir(spark: SparkSession, d: String): String = {
     val logs = corpusDir(d)
     val out = Scratch.path("mjgate2_stream_tables", d)
-    val seeded = java.nio.file.Paths.get(out, "_SEEDED")
-    this.synchronized {
-      if (!java.nio.file.Files.exists(seeded)) Seeds.timed("mjgate2_stream") {
-        graft.streaming.StreamingPipeline.runAvailable(
-          spark, logs, out, s"$out/_checkpoint")
-        java.nio.file.Files.createFile(seeded)
-      }
+    Seeds.once("mjgate2_stream", out) {
+      graft.streaming.StreamingPipeline.runAvailable(
+        spark, logs, out, s"$out/_checkpoint")
     }
     out
   }

@@ -65,11 +65,9 @@ object Maintain {
   val qAggIncrementalState: Q = (s, d) => {
     val ev = Tables.events(s, d)
     val dir = Relational.scratchDir("agg_state", d)
-    val seeded = java.nio.file.Paths.get(dir, "_SEEDED")
-    if (!java.nio.file.Files.exists(seeded)) Seeds.timed("agg_state") {
+    Seeds.once("agg_state", dir) {
       partials(ev.where(col("ts") < lit(StateCutoff).cast("timestamp")))
         .write.mode("overwrite").parquet(s"$dir/state")
-      java.nio.file.Files.createFile(seeded)
     }
     val delta =
       partials(ev.where(col("ts") >= lit(StateCutoff).cast("timestamp")))
@@ -114,11 +112,9 @@ object Maintain {
     */
   val qScanLineage: Q = (s, d) => {
     val dir = Scratch.path("lineage_files", d)
-    val seeded = java.nio.file.Paths.get(dir + "_SEEDED")
-    if (!java.nio.file.Files.exists(seeded)) Seeds.timed("lineage_files") {
+    Seeds.once("lineage_files", dir) {
       Tables.orders(s, d).repartition(8, col("o_orderkey"))
         .write.mode("overwrite").parquet(dir)
-      java.nio.file.Files.createFile(seeded)
     }
     s.read.parquet(dir)
       .withColumn("file",
@@ -584,15 +580,13 @@ object Maintain {
     val baseDir = Scratch.path("snap_base", d)
     val deltaDir = Scratch.path("snap_delta", d)
     val delDir = Scratch.path("snap_deletes", d)
-    val seeded = java.nio.file.Paths.get(baseDir + "_SEEDED")
-    if (!java.nio.file.Files.exists(seeded)) Seeds.timed("snap_base") {
+    Seeds.once("snap_base", baseDir) {
       orders.where(col("o_orderkey") % 4 < 3)
         .write.mode("overwrite").parquet(baseDir)
       orders.where(col("o_orderkey") % 4 === 3)
         .write.mode("overwrite").parquet(deltaDir)
       orders.where(col("o_orderkey") % 10 === 7).select(col("o_orderkey"))
         .write.mode("overwrite").parquet(delDir)
-      java.nio.file.Files.createFile(seeded)
     }
     val base = s.read.parquet(baseDir)
     val v2 = base.unionByName(s.read.parquet(deltaDir))
@@ -1486,7 +1480,7 @@ object Maintain {
         val n = p.getFileName.toString
         if (n.startsWith("omonth=") &&
             n.stripPrefix("omonth=") < RetentionCutoff)
-          StreamingQ.rmTree(p)
+          Scratch.rmTree(p)
       }
     } finally listing.close()
     val kept = s.read.parquet(lake)

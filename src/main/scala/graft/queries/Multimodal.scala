@@ -336,8 +336,8 @@ object Multimodal {
     * video rows genuine 16×16 YUV4MPEG2 streams of 31–120 frames (all
     * seeded by doc_id).
     *
-    * Materialized ONCE per data dir (`_SEEDED`-guarded, reported under
-    * seed_sec like the other standing inputs): a real lake holds its
+    * Materialized ONCE per data dir (reported under seed_sec like the
+    * other standing inputs): a real lake holds its
     * blobs at rest, and every multimodal key's declared operator is the
     * DECODE side — before this the five consumers re-ENCODED the whole
     * blob table (PNG deflate, RIFF packing, Y4M muxing) on every
@@ -348,10 +348,8 @@ object Multimodal {
     */
   def syntheticMedia(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     val tmp = Relational.scratchDir("media_lake", dir)
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(tmp, "_SEEDED"))) Seeds.timed("media_lake") {
+    Seeds.once("media_lake", tmp) {
       genSyntheticMedia(spark, dir).write.mode("overwrite").parquet(tmp)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SEEDED"))
     }
     spark.read.parquet(tmp)
       .as[MediaRow](org.apache.spark.sql.Encoders.product[MediaRow])

@@ -60,40 +60,27 @@ object Relational {
       |  AND l_shipdate <  TIMESTAMP '1996-04-01'
       |ORDER BY l_orderkey, l_linenumber, l_shipdate""".stripMargin
 
+  /** Stable scratch dir per (prefix, input dir) under [[Scratch]]'s
+    * per-user root: repeated Verify/Bench runs overwrite in place
+    * instead of accumulating temp garbage. (`private[graft]` so
+    * CompactionSpec can locate q_sink_compact's output dirs and count
+    * files.)
+    *
+    * The `q_scan_*` round-trips declare the SCAN as the operator under
+    * test, so their text/columnar seed is written once per sf dir
+    * ([[Seeds.once]]) and reused across reps and runs — re-seeding per
+    * rep measures the writer, not the reader (same rationale as
+    * q_sink_compact's fragmented seed).
+    */
+  private[graft] def scratchDir(prefix: String, d: String): String =
+    Scratch.root.resolve(prefix + "_" + Scratch.tag(d)).toString
+
   /** Partitioned parquet sink (reference E11, scrape.py:612-660:
     * `<table>/dt=.../` layout) — write partitioned by a key, read back,
     * aggregate. The oracle aggregates the original table, so this checks
     * the round-trip loses nothing. Hive-style directory partitioning is
     * exactly what enables partition pruning at 100 TB.
     */
-  /** Stable scratch dir per (prefix, input dir): repeated Verify/Bench
-    * runs overwrite in place instead of accumulating temp garbage.
-    * (`private[graft]` so CompactionSpec can locate q_sink_compact's
-    * output dirs and count files.)
-    */
-  private[graft] def scratchDir(prefix: String, d: String): String = {
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_scratch",
-      prefix + "_" + Integer.toHexString(d.hashCode))
-    java.nio.file.Files.createDirectories(p.getParent)
-    p.toString
-  }
-
-  /** Run `write` only when `dir` lacks a `_SUCCESS` marker. The
-    * `q_scan_*` round-trips declare the SCAN as the operator under
-    * test, so the text/columnar seed is written once per sf dir and
-    * reused across reps and runs — re-seeding per rep measures the
-    * writer, not the reader (same rationale as q_sink_compact's
-    * fragmented seed). A change to a seed's projection must bump its
-    * scratch prefix, or stale dirs would feed the new reader.
-    */
-  private def seedOnce(prefix: String, dir: String)(write: => Unit): Unit =
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS")))
-      // the Seeds label is the scratch PREFIX passed straight through —
-      // never reverse-parsed from the path, which would truncate any
-      // future prefix whose last underscore segment is all-hex
-      Seeds.timed(prefix)(write)
-
   val qSinkPartitioned: Q = (s, d) => {
     val tmp = scratchDir("sink", d)
     Tables.lineitem(s, d)
@@ -134,20 +121,20 @@ object Relational {
     * oracle computes the same from the original table, proving the
     * rewrite lost nothing. CompactionSpec asserts the physical
     * file-count collapse (~4 → 1 per partition). The fragmented seed is
-    * written ONCE per sf dir and reused by later runs (guarded on its
-    * `_SUCCESS` marker): seeding cost twice the compaction's, so a
-    * benchmark that re-seeded per rep measured the seed, not the
-    * operator under test.
+    * written ONCE per sf dir and reused by later runs: seeding cost
+    * twice the compaction's, so a benchmark that re-seeded per rep
+    * measured the seed, not the operator under test.
     */
   val qSinkCompact: Q = (s, d) => {
     val frag = scratchDir("compact_frag", d)
     val tidy = scratchDir("compact_tidy", d)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(frag, "_SUCCESS")))
+    Seeds.once("compact_frag", frag) {
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"),
                 date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .repartition(4)
         .write.mode("overwrite").partitionBy("month").parquet(frag)
+    }
     s.read.parquet(frag)
       .repartition(col("month"))
       .write.mode("overwrite").partitionBy("month").parquet(tidy)
@@ -167,7 +154,7 @@ object Relational {
     */
   val qScanTextGz: Q = (s, d) => {
     val tmp = scratchDir("textgz", d)
-    seedOnce("textgz", tmp) {
+    Seeds.once("textgz", tmp) {
       Tables.documents(s, d).select("text")
         .write.mode("overwrite").option("compression", "gzip").text(tmp)
     }
@@ -192,7 +179,7 @@ object Relational {
     */
   val qScanCsv: Q = (s, d) => {
     val tmp = scratchDir("csv", d)
-    seedOnce("csv", tmp) {
+    Seeds.once("csv", tmp) {
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .write.mode("overwrite").option("header", "true").csv(tmp)
@@ -223,7 +210,7 @@ object Relational {
     */
   val qScanOrc: Q = (s, d) => {
     val tmp = scratchDir("orc", d)
-    seedOnce("orc", tmp) {
+    Seeds.once("orc", tmp) {
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .write.mode("overwrite").orc(tmp)
@@ -252,7 +239,7 @@ object Relational {
     */
   val qScanJson: Q = (s, d) => {
     val tmp = scratchDir("json", d)
-    seedOnce("json", tmp) {
+    Seeds.once("json", tmp) {
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .write.mode("overwrite").json(tmp)
@@ -287,7 +274,7 @@ object Relational {
     // parallelize (guide §6: input split size bounds scan parallelism).
     // Prefix bumped xml → xmlp so stale single-file dirs never feed it.
     val tmp = scratchDir("xmlp", d)
-    seedOnce("xmlp", tmp) {
+    Seeds.once("xmlp", tmp) {
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
         .repartition(16)
@@ -858,19 +845,17 @@ object Relational {
         Integer.toHexString(d.hashCode)
       val path = s"$base/${name}_$nBuckets"
       if (!s.catalog.tableExists(tbl)) {
-        if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(path, "_SUCCESS"))) {
-          s.sql(s"""CREATE TABLE $tbl ($colsDdl) USING parquet
-                   |CLUSTERED BY ($key) SORTED BY ($key)
-                   |INTO $nBuckets BUCKETS
-                   |LOCATION '$path'""".stripMargin)
-        } else Seeds.timed(s"bucketed_$name") {
+        Seeds.once(s"bucketed_$name", path) {
           df.repartition(nBuckets, col(key))
             .write.mode("overwrite").format("parquet")
             .bucketBy(nBuckets, key).sortBy(key)
             .option("path", path)
             .saveAsTable(tbl)
         }
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl ($colsDdl) USING parquet
+                 |CLUSTERED BY ($key) SORTED BY ($key)
+                 |INTO $nBuckets BUCKETS
+                 |LOCATION '$path'""".stripMargin)
       }
       s.table(tbl)
     }
@@ -931,14 +916,7 @@ object Relational {
     // guard re-registers the partitioned DDL over the surviving files
     // and recovers the partition listing
     if (!s.catalog.tableExists(tbl)) {
-      if (java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$base/orders", "_SUCCESS"))) {
-        s.sql(s"""CREATE TABLE $tbl (o_orderkey BIGINT,
-                 |  o_totalprice DOUBLE, o_orderpriority STRING)
-                 |USING parquet PARTITIONED BY (o_orderpriority)
-                 |LOCATION '$base/orders'""".stripMargin)
-        s.sql(s"MSCK REPAIR TABLE $tbl")
-      } else Seeds.timed("dpp_orders") {
+      Seeds.once("dpp_orders", s"$base/orders") {
         Tables.orders(s, d)
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
           .write.mode("overwrite").format("parquet")
@@ -946,16 +924,23 @@ object Relational {
           .option("path", s"$base/orders")
           .saveAsTable(tbl)
       }
+      if (!s.catalog.tableExists(tbl)) {
+        s.sql(s"""CREATE TABLE IF NOT EXISTS $tbl (o_orderkey BIGINT,
+                 |  o_totalprice DOUBLE, o_orderpriority STRING)
+                 |USING parquet PARTITIONED BY (o_orderpriority)
+                 |LOCATION '$base/orders'""".stripMargin)
+        s.sql(s"MSCK REPAIR TABLE $tbl")
+      }
     }
     // the dim must be a STORED table (as in production): an in-memory
     // LocalRelation dim gets its filter constant-folded away, and DPP
     // only fires when the build side still carries a selective predicate
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$base/dim", "_SUCCESS")))
+    Seeds.once("dpp_dim", s"$base/dim") {
       Seq(
         ("1-URGENT", "high"), ("2-HIGH", "high"), ("3-MEDIUM", "low"),
         ("4-NOT SPECIFIED", "low"), ("5-LOW", "low")).toDF("prio", "tier")
         .write.mode("overwrite").parquet(s"$base/dim")
+    }
     val dim = s.read.parquet(s"$base/dim")
     s.table(tbl)
       .join(broadcast(dim), col("o_orderpriority") === col("prio"))

@@ -33,7 +33,7 @@ object Scratch {
     */
   def tag(d: String): String = Integer.toHexString(d.hashCode)
 
-  private lazy val root: Path = {
+  private[graft] lazy val root: Path = {
     val user = sys.props.getOrElse("user.name", "graft")
     val p = Paths.get(sys.props("java.io.tmpdir"), s"graft_scratch_$user")
     Files.createDirectories(p)
@@ -54,4 +54,13 @@ object Scratch {
   /** Bind a static oracle SQL string to a concrete data dir. */
   def resolveSql(sql: String, d: String): String =
     sql.replace(Placeholder, tag(d))
+
+  /** Delete `p` and everything under it; a missing `p` is a no-op. */
+  private[graft] def rmTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      Files.walk(p).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(Files.deleteIfExists(_))
+    }
 }

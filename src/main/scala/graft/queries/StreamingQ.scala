@@ -411,15 +411,14 @@ object StreamingQ {
     * feed is driver-resident by definition), EXECUTORS read the batch
     * rows here — the one shape that survives a 100× scale-up, where
     * each weekly file becomes a directory of part files and the
-    * micro-batch admission is unchanged. Seeding is once-per-dir
-    * (`_SEEDED`-guarded), same rationale as the bucketed layouts: the
-    * operator under test is the streaming aggregate, not the writer.
+    * micro-batch admission is unchanged. Seeding is once-per-dir, same
+    * rationale as the bucketed layouts: the operator under test is the
+    * streaming aggregate, not the writer.
     */
   private[graft] def eventWeekFiles(s: SparkSession, d: String): String = {
     import s.implicits._
     val dir = graft.queries.Relational.scratchDir("stream_weeks", d)
-    val seeded = java.nio.file.Paths.get(dir, "_SEEDED")
-    if (!java.nio.file.Files.exists(seeded)) Seeds.timed("stream_weeks") {
+    Seeds.once("stream_weeks", dir) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"),
                 col("event_type"), col("value"))
@@ -447,8 +446,7 @@ object StreamingQ {
         place(ev.where(date_trunc("week", col("ts")) === wk), i)
       }
       place(Seq(sentinel).toDS().toDF(), weeks.length)
-      rmTree(java.nio.file.Paths.get(tmp))
-      java.nio.file.Files.createFile(seeded)
+      Scratch.rmTree(java.nio.file.Paths.get(tmp))
     }
     dir
   }
@@ -529,7 +527,7 @@ object StreamingQ {
       try q.awaitTermination()
       finally {
         q.stop()
-        try rmTree(ckpt) catch { case _: Exception => }
+        try Scratch.rmTree(ckpt) catch { case _: Exception => }
       }
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     s.table(name)
@@ -900,7 +898,7 @@ object StreamingQ {
                                  (updates0: DataFrame, batchId: Long): Unit = {
     val ss = updates0.sparkSession
     val dst = base.resolve(s"v${batchId + 1}")
-    rmTree(dst) // a crashed attempt's partial output must not survive
+    Scratch.rmTree(dst) // a crashed attempt's partial output must not survive
     val updates = updates0.withColumn("bucket", mvBucket(col("user_id"))).persist()
     try {
       val changed = updates.select("bucket").distinct()
@@ -946,14 +944,6 @@ object StreamingQ {
       .orderBy("user_id")
   }
 
-  private[graft] def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-
   val qStreamMv: Q = (s, d) => {
     // DISTRIBUTED week-file replay: executors read the weekly parquet
     // files — two per micro-batch; the driver only admits files and
@@ -969,10 +959,8 @@ object StreamingQ {
     // every foreachBatch non-empty) and is filtered at read — it is not
     // in the oracle's events table.
     val dir = eventWeekFiles(s, d)
-    val base = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_scratch",
-      "mv_" + Integer.toHexString(d.hashCode))
-    rmTree(base) // stale versions from a previous suite shape
+    val base = java.nio.file.Paths.get(Relational.scratchDir("mv", d))
+    Scratch.rmTree(base) // stale versions from a previous suite shape
     java.nio.file.Files.createDirectories(base)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "2")
@@ -999,7 +987,7 @@ object StreamingQ {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       try q.awaitTermination()
-      finally { q.stop(); rmTree(ckpt) }
+      finally { q.stop(); Scratch.rmTree(ckpt) }
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     mvRead(s, base, lastV).where(col("user_id") >= 0).orderBy("user_id")
   }
@@ -1036,10 +1024,8 @@ object StreamingQ {
     // deterministic per-dataset checkpoint, recreated per run: the state
     // files must OUTLIVE this function (the returned frame reads them
     // lazily), so cleanup is rewrite-on-next-run, not a finally block
-    val ckpt = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_scratch",
-      "stinsp_" + Integer.toHexString(d.hashCode))
-    rmTree(ckpt)
+    val ckpt = java.nio.file.Paths.get(Relational.scratchDir("stinsp", d))
+    Scratch.rmTree(ckpt)
     java.nio.file.Files.createDirectories(ckpt)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "2")

@@ -72,7 +72,7 @@ object SessProbe {
           s"durations=${p.durationMs}")
       }
       q.stop()
-      try graft.queries.StreamingQ.rmTree(ckpt) catch { case _: Exception => }
+      try graft.queries.Scratch.rmTree(ckpt) catch { case _: Exception => }
       val n = spark.table(s"sess_probe_$rep").where(col("user_id") =!= -1L).count()
       val tEnd = System.nanoTime()
       println(f"rep$rep seed=${(tSeed - t0) / 1e9}%.2f stream=${(tStream - tSeed) / 1e9}%.2f " +

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.StreamingQ
+import graft.queries.{Scratch, StreamingQ}
 
 /** Golden assertions for the true-stream semantics (watermark, dedup,
   * stateful) driven by the deterministic MemoryStream batches in
@@ -56,7 +56,7 @@ class StreamingSpec extends AnyFunSuite {
           .filter(k => k.startsWith("rocksdb") && k.toLowerCase.contains("commit"))
         assert(commitMetrics.nonEmpty,
           s"expected named rocksdb commit metrics, got ${metrics.keys.toSeq.sorted}")
-      } finally { q.stop(); StreamingQ.rmTree(ckpt) }
+      } finally { q.stop(); Scratch.rmTree(ckpt) }
     }
   }
 
@@ -309,7 +309,7 @@ class StreamingSpec extends AnyFunSuite {
         == Seq((1L, 3L, 10.0), (2L, 1L, 10.0), (3L, 1L, 1.0)))
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      StreamingQ.rmTree(base); StreamingQ.rmTree(ckpt)
+      Scratch.rmTree(base); Scratch.rmTree(ckpt)
     }
   }
 
@@ -367,7 +367,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(m2.removed(touched).values.toSet == Set(1L),
         s"untouched buckets must still resolve to v1, got $m2")
       assert(m2.keySet == StreamingQ.mvManifest(base, 1L).keySet)
-    } finally StreamingQ.rmTree(base)
+    } finally Scratch.rmTree(base)
   }
 
   /** Manifest fan-out bound: without compaction, a skewed update history
@@ -419,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(mv == expected, s"MV diverged after compactions")
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      StreamingQ.rmTree(base)
+      Scratch.rmTree(base)
     }
   }
 
@@ -549,7 +549,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(zs(0).isEmpty && zs(1).isEmpty)
       assert(zs(2).contains(-1.0))
       assert(zs(3).exists(z => math.abs(z - (-0.7833)) < 1e-9))
-    } finally { q.stop(); StreamingQ.rmTree(ckpt) }
+    } finally { q.stop(); Scratch.rmTree(ckpt) }
   }
 
   /** A key fully drained by its event-time timer (no open days left)
@@ -604,7 +604,7 @@ class StreamingSpec extends AnyFunSuite {
         Timestamp.valueOf("2024-01-10 00:00:00")))
       assert(click.map(_.getAs[Double]("trailing_mean")).toSeq ==
         Seq(1.0, 1.0))
-    } finally { q.stop(); StreamingQ.rmTree(ckpt) }
+    } finally { q.stop(); Scratch.rmTree(ckpt) }
   }
 
   test("backfill: batch/stream seam loses and duplicates nothing") {
