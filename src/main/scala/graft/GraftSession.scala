@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plumbing shared by the local driver mains (Bench, Verify, Explain)
-  * and the test session.
+/** Plumbing shared by the local mains (Bench, Verify, Explain,
+  * EtlMain) and the test session.
   */
 object GraftSession {
 

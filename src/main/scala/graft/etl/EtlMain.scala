@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
+import graft.queries.Scratch
 
 /** CLI for the mjlog ETL (reference main.py): parse a log directory tree
   * (`<logDir>/<YYYYMMDD>/<game_id>.xml`) into 9 Hive-partitioned parquet
@@ -51,14 +52,9 @@ object EtlMain {
     println(s"[etl] engine: ${if (useV2) "mjlog v2" else "typed"}" +
       (if (forced) " (forced)" else " (auto)"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).appName("graft-etl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val warm = java.nio.file.Files.createTempDirectory("graft_warm_")
     try {
       // Warm the JVM paths the pipeline will hit (first-job executor
       // launch, whole-stage codegen bootstrap, parquet writer + commit
@@ -66,7 +62,6 @@ object EtlMain {
       // land inside the measured wall. Symmetric with the reference
       // measurement, which excludes CPython interpreter startup
       // (THROUGHPUT.md "Method").
-      val warm = java.nio.file.Files.createTempDirectory("graft_warm_")
       spark.range(64).selectExpr("id", "id % 4 AS dt")
         .write.mode("overwrite").partitionBy("dt").parquet(warm.toString)
       spark.read.parquet(warm.toString).count()
@@ -83,6 +78,9 @@ object EtlMain {
         WallGen.write(spark, n, java.time.LocalDate.now(java.time.Clock.systemUTC()), args(1))
         println(s"[etl] paiyamas: $n walls")
       }
-    } finally spark.stop()
+    } finally {
+      spark.stop()
+      Scratch.rmTree(warm)
+    }
   }
 }

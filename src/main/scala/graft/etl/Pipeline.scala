@@ -171,9 +171,10 @@ object Pipeline {
     */
   val SmallLogBytes: Long = 32L << 20
 
-  /** Lake bytes a MahjongAnalytics report scans below which it runs
-    * interpreted. A parquet lake holds about a third of the log bytes it
-    * came from, and the reports turn over far sooner than the ETL: timed
+  /** Lake bytes a MahjongAnalytics report scans below which it runs in
+    * small mode ([[SmallModeConfs]]: interpreted, without AQE). A parquet
+    * lake holds about a third of the log bytes it came from, and the
+    * reports turn over far sooner than the ETL: timed
     * as a daily cycle runs them ([[ReportModeProbe]], THROUGHPUT.md),
     * the window reports run faster with codegen from 0.3-0.5 MiB
     * scanned, the join and aggregate ones from 0.5-1.7 MiB. With one
@@ -186,6 +187,11 @@ object Pipeline {
     * interpreted won up to ~1 MiB (25-30% less time at 0.2-0.4 MiB), the
     * two modes tied at 1-1.5 MiB, and codegen won from 1.8 MiB (36% less
     * time at 3.6 MiB) ([[ReportModeProbe]] `llm`, THROUGHPUT.md).
+    *
+    * Both sweeps were re-run once small mode also turned AQE off, and
+    * the crossover held: the six reports' small mode lost first at
+    * 1.3 MiB (actionSequences), and the 14 LlmOps keys' small mode took
+    * 25% less time at 0.73 MiB and 12% more at 1.81 MiB.
     */
   val SmallLakeBytes: Long = 1L << 20
 
@@ -197,12 +203,29 @@ object Pipeline {
   def scanBytes(df: DataFrame): BigInt =
     df.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum
 
+  /** What small mode sets, and why, one conf per line:
+    *  - `wholeStage=false`: no whole-stage codegen, so no ~100-300 ms
+    *    Janino compile per distinct plan;
+    *  - `factoryMode=NO_CODEGEN`: expressions, projections and predicates
+    *    are interpreted too, so nothing is compiled at all;
+    *  - `adaptive.enabled=false`: a query runs as one job with its stages,
+    *    not one job per shuffle stage with a re-optimization after each.
+    */
+  val SmallModeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.adaptive.enabled" -> "false")
+
   /** The one execution-mode rule. Whole-stage codegen costs ~100-300 ms
     * of Janino compilation per distinct plan, and Spark's codegen cache
     * holds 100 classes, so a cycle of calls over KB-to-MB inputs
-    * recompiles on every pass and never earns the cost back. Below
-    * `smallBelow` bytes of input the plan runs interpreted; at real
-    * volume codegen pays for itself within one task. Its three callers:
+    * recompiles on every pass and never earns the cost back; AQE submits
+    * each shuffle stage as its own job and re-plans after it, a fixed
+    * cost per stage that small inputs never earn back either. Below
+    * `smallBelow` bytes of input the clone gets [[SmallModeConfs]]; at
+    * real volume codegen pays for itself within one task and AQE's
+    * runtime statistics pay for the re-plans, so the conf is left as the
+    * caller set it. Its three callers:
     *  - [[run]], sized by the binaryFile scan, against [[SmallLogBytes]];
     *  - the six public MahjongAnalytics reports, sized by the lake bytes
     *    they scan ([[scanBytes]]), against [[SmallLakeBytes]];
@@ -212,10 +235,7 @@ object Pipeline {
     * call — never the caller's.
     */
   def executionMode(clone: SparkSession, inputBytes: BigInt, smallBelow: Long): Unit =
-    if (inputBytes < smallBelow) {
-      clone.conf.set("spark.sql.codegen.wholeStage", "false")
-      clone.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
+    if (inputBytes < smallBelow) SmallModeConfs.foreach { case (k, v) => clone.conf.set(k, v) }
 
   /** Full ETL: logDir → 9 Hive-partitioned parquet table dirs
     * (`<outDir>/<table>/dt=YYYY-MM-DD/...`, reference layout E11), in
@@ -240,12 +260,11 @@ object Pipeline {
       s.read.format("mjlog").load(logDir).as[ParsedGame]
     }
 
-  /** Every conf below goes on a clone of the caller's session, so the
-    * caller's conf is never written and concurrent runs on one session
-    * cannot see each other's settings.
+  /** The clone of `spark` an ETL run executes on. Every conf below goes
+    * on the clone, so the caller's conf is never written and concurrent
+    * runs on one session cannot see each other's settings.
     */
-  private def runImpl(spark: SparkSession, outDir: String)
-                     (source: SparkSession => Dataset[ParsedGame]): Unit = {
+  private[graft] def etlSession(spark: SparkSession): SparkSession = {
     val s = GraftShim.cloneSession(spark)
     // dynamic partition overwrite: re-running one date's logs replaces
     // only that date's dt= partitions — the idempotent per-date re-run
@@ -268,6 +287,18 @@ object Pipeline {
         (s.sparkContext.defaultParallelism * 2).toString))
     sys.env.get("SPARK_GRAFT_MAXPART").foreach(v =>
       s.conf.set("spark.sql.files.maxPartitionBytes", v))
+    // every read and write of the run, in tasks and on the calling
+    // thread, uses the local FS that sets permissions without forking
+    // `chmod`; the JVM's FS cache holds the stock instance, so this
+    // clone builds its own per call
+    s.conf.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    s
+  }
+
+  private def runImpl(spark: SparkSession, outDir: String)
+                     (source: SparkSession => Dataset[ParsedGame]): Unit = {
+    val s = etlSession(spark)
     // ONE dt-clustering shuffle for the whole pipeline: the id window
     // (partitionBy dt) reuses this partitioning instead of shuffling
     // again, and every projection stays narrow, so all 9 partitioned

@@ -10,9 +10,11 @@ import org.apache.spark.sql.classic.GraftShim
 
 import graft.queries.{LlmOps, MahjongAnalytics}
 
-/** Times calls interpreted, with whole-stage codegen, and in the mode
-  * [[Pipeline.executionMode]] picks, over inputs that grow step by step
-  * (dev tool; the sweeps behind [[Pipeline.SmallLakeBytes]]). Each step
+/** Times calls in small mode (what [[Pipeline.executionMode]] sets below
+  * its cut-off: interpreted, without AQE), in large mode (the session's
+  * defaults: whole-stage codegen and AQE), and in the mode the rule
+  * picks, over inputs that grow step by step (dev tool; the sweeps
+  * behind [[Pipeline.SmallLakeBytes]]). Each step
   * warms up with one round of every mode, then runs each mode as a block
   * of `rounds` rounds of the calls in turn, as a daily cycle or a bench
   * loop runs them, and prints each call's input bytes and median time and
@@ -46,7 +48,7 @@ object ReportModeProbe {
     "q_text_tfidf", "q_text_quality_gopher", "q_text_stats", "q_text_tokens",
     "q_sim_pairs", "q_sim_knn_join")
 
-  private val Modes = Seq("interpreted", "codegen", "rule")
+  private val Modes = Seq("small", "large", "rule")
 
   def main(args: Array[String]): Unit = {
     val llm = args.head == "llm"
@@ -91,11 +93,12 @@ object ReportModeProbe {
     spark.stop()
   }
 
-  private def force(s: SparkSession, mode: String): Unit = {
-    val interpreted = mode == "interpreted"
-    s.conf.set("spark.sql.codegen.wholeStage", (!interpreted).toString)
-    s.conf.set("spark.sql.codegen.factoryMode", if (interpreted) "NO_CODEGEN" else "FALLBACK")
-  }
+  /** Small mode is the rule's own small branch; large mode removes the
+    * confs that branch sets, as the rule leaves them from its cut-off up.
+    */
+  private def force(s: SparkSession, mode: String): Unit =
+    if (mode == "small") Pipeline.executionMode(s, inputBytes = 0, smallBelow = 1)
+    else Pipeline.SmallModeConfs.foreach { case (k, _) => s.conf.unset(k) }
 
   /** One date dir of `n` LogGen games, numbered from `first`. */
   private def writeDay(root: Path, day: Int, first: Int, n: Int): String = {

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -783,11 +783,18 @@ class LlmOpsSpec extends AnyFunSuite {
     }.size
   }
 
-  /** Key `k`'s body on a clone of `caller` that runs with codegen. */
+  /** AQE plans in `df`'s executed plan, subqueries included. */
+  private def adaptivePlans(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => a
+    }.size
+
+  /** Key `k`'s body on a clone of `caller` in large mode: every conf small
+    * mode sets is removed, so it runs with codegen and AQE.
+    */
   private def withCodegen(caller: SparkSession, k: String): DataFrame = {
     val c = GraftShim.cloneSession(caller)
-    c.conf.set("spark.sql.codegen.wholeStage", "true")
-    c.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    Pipeline.SmallModeConfs.foreach { case (key, _) => c.conf.unset(key) }
     LlmOps.bodies(k)(c, sf)
   }
 
@@ -800,30 +807,42 @@ class LlmOpsSpec extends AnyFunSuite {
     // conf entries the caller gained, lost or changed since `before`
     def written = { val now = caller.conf.getAll.toSet; (now diff before) ++ (before diff now) }
     var codegen = 0
+    var adaptive = 0
     LlmOps.entries.keys.toSeq.sorted.foreach { k =>
       val interpreted = LlmOps.entries(k)(caller, sf)
       assert(written.isEmpty, s"$k wrote the caller's conf")
       assert(interpreted.sparkSession ne caller, k)
       assert(codegenStages(interpreted) == 0, s"$k ran codegen below the cut-off")
+      assert(adaptivePlans(interpreted) == 0, s"$k ran AQE below the cut-off")
       val compiled = withCodegen(caller, k)
       codegen += codegenStages(compiled)
+      adaptive += adaptivePlans(compiled)
       assert(interpreted.schema == compiled.schema, k)
       // exact and ordered, as the oracle compares
       assert(interpreted.collect().toSeq == compiled.collect().toSeq, k)
     }
     assert(codegen > 0)
+    assert(adaptive > 0)
     assert(written.isEmpty)
   }
 
   test("the execution-mode rule keeps an entry's codegen at the cut-off and " +
        "drops it one byte below") {
-    def stagesAt(bytes: BigInt): Int = {
+    /** Codegen stages, AQE plans and the conf entries the rule wrote, for
+      * an entry's body on a clone the rule sized at `bytes`.
+      */
+    def modeAt(bytes: BigInt): (Int, Int, Map[String, String]) = {
       val c = GraftShim.cloneSession(spark)
+      val before = c.conf.getAll
       Pipeline.executionMode(c, bytes, Pipeline.SmallLakeBytes)
-      codegenStages(LlmOps.bodies("q_dedup_exact")(c, sf))
+      val df = LlmOps.bodies("q_dedup_exact")(c, sf)
+      (codegenStages(df), adaptivePlans(df), c.conf.getAll.toSet.diff(before.toSet).toMap)
     }
-    assert(stagesAt(Pipeline.SmallLakeBytes) > 0)
-    assert(stagesAt(Pipeline.SmallLakeBytes - 1) == 0)
+    val (codegenAt, aqeAt, writtenAt) = modeAt(Pipeline.SmallLakeBytes)
+    assert(codegenAt > 0 && aqeAt > 0 && writtenAt.isEmpty)
+    val (codegenBelow, aqeBelow, writtenBelow) = modeAt(Pipeline.SmallLakeBytes - 1)
+    assert(codegenBelow == 0 && aqeBelow == 0)
+    assert(writtenBelow.get("spark.sql.adaptive.enabled") == Some("false"))
   }
 
   test("the entries' size is the on-disk bytes of both tables; a missing " +

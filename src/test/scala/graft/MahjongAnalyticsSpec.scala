@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.execution.WholeStageCodegenExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Pipeline
@@ -37,6 +37,25 @@ class MahjongAnalyticsSpec extends AnyFunSuite {
     new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
       case w: WholeStageCodegenExec => w
     }.size
+  }
+
+  /** AQE plans in `df`'s executed plan, subqueries included. */
+  private def adaptivePlans(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => a
+    }.size
+
+  /** A lake of one fixture game, which ends its only kyoku in an agari:
+    * the nagares table dir holds no data files.
+    */
+  private lazy val noNagareLake: String = {
+    val logs = Files.createTempDirectory("graft_no_nagare_")
+    val day = Files.createDirectories(logs.resolve("20240101"))
+    Files.copy(Paths.get(getClass.getResource(
+      "/mjlog/20240101/2024010100gm-0001.xml").toURI), day.resolve("g.xml"))
+    val lake = Files.createTempDirectory("graft_no_nagare_lake_").toString
+    Pipeline.run(spark, logs.toString, lake)
+    lake
   }
 
   test("win rate by rule flags") {
@@ -201,13 +220,7 @@ class MahjongAnalyticsSpec extends AnyFunSuite {
   }
 
   test("every report runs over a lake whose nagares table has no files") {
-    // the first fixture game ends its only kyoku in an agari
-    val logs = Files.createTempDirectory("graft_no_nagare_")
-    val day = Files.createDirectories(logs.resolve("20240101"))
-    Files.copy(Paths.get(getClass.getResource(
-      "/mjlog/20240101/2024010100gm-0001.xml").toURI), day.resolve("g.xml"))
-    val lake = Files.createTempDirectory("graft_no_nagare_lake_").toString
-    Pipeline.run(spark, logs.toString, lake)
+    val lake = noNagareLake
     val nagares = Paths.get(lake, "nagares")
     assert(Files.isDirectory(nagares))
     assert(!Files.walk(nagares).anyMatch(_.toString.endsWith(".parquet")))
@@ -220,36 +233,56 @@ class MahjongAnalyticsSpec extends AnyFunSuite {
     assert(MahjongAnalytics.scoreProgression(spark, lake).count() == 4)
   }
 
+  test("registered views read a table dir with no files as an empty table") {
+    val s = spark.newSession()
+    MahjongCatalog.registerViews(s, noNagareLake)
+    assert(s.sql("SELECT count(*) FROM nagares").head().getLong(0) == 0)
+    assert(s.sql("SELECT count(*) FROM games").head().getLong(0) == 1)
+  }
+
   test("each report returns the same schema and rows, in order, interpreted " +
        "as with codegen") {
     reports.foreach { case (name, r) =>
       val interpreted = r(spark, dir)
-      // the same report on its own clone with the codegen confs removed
-      // before anything was planned: it plans as a codegen session does
+      // the same report on its own clone with every small-mode conf
+      // removed before anything was planned: it plans as a session above
+      // the cut-off does, with codegen and AQE
       val codegen = r(spark, dir)
-      Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-        .foreach(codegen.sparkSession.conf.unset)
+      Pipeline.SmallModeConfs.foreach { case (k, _) => codegen.sparkSession.conf.unset(k) }
       assert(codegenStages(interpreted) == 0, name)
       assert(codegenStages(codegen) > 0, name)
+      assert(adaptivePlans(interpreted) == 0, name)
+      assert(adaptivePlans(codegen) > 0, name)
       assert(interpreted.schema == codegen.schema, name)
       assert(interpreted.collect().toSeq == codegen.collect().toSeq, name)
     }
   }
 
   test("the execution-mode rule keeps codegen from each cut-off up") {
-    def stagesAt(bytes: BigInt, smallBelow: Long): Int = {
+    /** Codegen stages, AQE plans and the conf entries the rule wrote, for
+      * an aggregate on a clone the rule sized at `bytes`.
+      */
+    def modeAt(bytes: BigInt, smallBelow: Long): (Int, Int, Map[String, String]) = {
       val s = GraftShim.cloneSession(spark)
+      val before = s.conf.getAll
       Pipeline.executionMode(s, bytes, smallBelow)
-      codegenStages(Pipeline.readTable(s, dir, "game_scores")
-        .groupBy(col("player_index")).count())
+      val df = Pipeline.readTable(s, dir, "game_scores").groupBy(col("player_index")).count()
+      (codegenStages(df), adaptivePlans(df), s.conf.getAll.toSet.diff(before.toSet).toMap)
     }
     for (cut <- Seq(Pipeline.SmallLogBytes, Pipeline.SmallLakeBytes)) {
-      assert(stagesAt(cut, cut) > 0, cut)
-      assert(stagesAt(cut - 1, cut) == 0, cut)
+      val (codegenAt, aqeAt, writtenAt) = modeAt(cut, cut)
+      assert(codegenAt > 0 && aqeAt > 0 && writtenAt.isEmpty, cut)
+      val (codegenBelow, aqeBelow, writtenBelow) = modeAt(cut - 1, cut)
+      assert(codegenBelow == 0 && aqeBelow == 0, cut)
+      assert(writtenBelow.get("spark.sql.adaptive.enabled") == Some("false"), cut)
     }
-    // the fixture lake is far below the reports' cut-off
+    // the fixture lake is far below the reports' cut-off, so no report
+    // runs AQE
     reports.foreach { case (name, r) =>
-      assert(Pipeline.scanBytes(r(spark, dir)) < Pipeline.SmallLakeBytes, name)
+      val df = r(spark, dir)
+      assert(Pipeline.scanBytes(df) < Pipeline.SmallLakeBytes, name)
+      assert(df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false", name)
+      assert(adaptivePlans(df) == 0, name)
     }
   }
 

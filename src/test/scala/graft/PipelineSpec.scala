@@ -161,6 +161,32 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("a lake written by Pipeline.run keeps its file set (parts and their " +
+       ".crc sidecars) and the default file and dir permissions") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.permission.FsPermission
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    def posix(p: FsPermission) = PosixFilePermissions.fromString(p.toString)
+    val filePerm = posix(FsPermission.getFileDefault.applyUMask(umask))
+    val dirPerm = posix(FsPermission.getDirDefault.applyUMask(umask))
+    for (t <- Pipeline.TableNames) {
+      val root = Paths.get(outDir, t)
+      val (dirs, files) = Files.walk(root).iterator().asScala.toSeq.partition(Files.isDirectory(_))
+      // the table dir and its dt= dirs: no staging or _temporary dir left
+      assert(dirs.tail.forall(d => root.relativize(d).toString.matches("dt=\\d{4}-\\d{2}-\\d{2}")), t)
+      val names = files.map(root.relativize(_).toString).toSet
+      val parts = names.filter(_.matches("dt=[^/]+/part-[^/]+\\.parquet"))
+      val crcs = parts.map { p => val f = Paths.get(p); f.resolveSibling(s".${f.getFileName}.crc").toString }
+      assert(parts.nonEmpty, t)
+      // dynamic partition overwrite commits through a staging dir and
+      // moves only the dt= dirs out of it, so no _SUCCESS marker lands
+      assert(names == parts ++ crcs, t)
+      dirs.foreach(d => assert(Files.getPosixFilePermissions(d) == dirPerm, d))
+      files.foreach(f => assert(Files.getPosixFilePermissions(f) == filePerm, f))
+    }
+  }
+
   test("declared table schemas equal what Spark infers from batch and streaming lakes") {
     val stream = Files.createTempDirectory("graft_etl_stream_").toString
     StreamingPipeline.runAvailable(spark, getClass.getResource("/mjlog").getPath,
