@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Plumbing shared by the local mains (Bench, Verify, Explain,
-  * EtlMain) and the test session.
+  * EtlMain, ScaleGen) and the test session.
   */
 object GraftSession {
 

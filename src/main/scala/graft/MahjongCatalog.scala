@@ -23,7 +23,7 @@ object MahjongCatalog {
     (Pipeline.TableNames :+ "paiyamas").foreach { name =>
       if (new java.io.File(s"$tablesDir/$name").exists()) {
         val df =
-          if (name == "paiyamas") spark.read.parquet(s"$tablesDir/$name")
+          if (name == "paiyamas") Tables.parquet(spark, s"$tablesDir/$name")
           else Pipeline.readTable(spark, tablesDir, name)
         df.createOrReplaceTempView(name)
       }

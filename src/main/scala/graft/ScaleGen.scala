@@ -52,12 +52,8 @@ object ScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "scratch/sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .appName("graft-scalegen")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -67,8 +63,7 @@ object ScaleGen {
 
   def generate(spark: SparkSession, src: String, dst: String,
                replicas: Int): Unit = {
-    def read(name: String): DataFrame =
-      spark.read.parquet(s"$src/$name.parquet")
+    def read(name: String): DataFrame = Tables.load(spark, src, name)
     def write(df: DataFrame, name: String, files: Int): Unit =
       df.repartition(files).write.mode("overwrite")
         .parquet(s"$dst/$name.parquet")

@@ -1,9 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicLong
 
-/** Loaders for the driver testdata tables (see /root/repo/TESTDATA.md).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+/** Loaders for the testdata tables (see TESTDATA.md).
   *
   * Design notes for 100 TB scale: every loader is a plain parquet scan so
   * Catalyst's `FileSourceScanExec` keeps predicate pushdown / column
@@ -22,7 +26,95 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Files a schema was inferred from: (path, length, mtime) of each. */
+  private type Fingerprint = Set[(String, Long, Long)]
+  /** Absolute path and the reading session's `spark.sql.*` conf. */
+  private type Key = (String, Map[String, String])
+
+  /** Most entries the schema memo keeps; the least recently used goes. */
+  private val MemoEntries = 1024
+
+  private val memo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Key, (StructType, Fingerprint)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Key, (StructType, Fingerprint)]) =
+        size() > MemoEntries
+    })
+  private val hitCount = new AtomicLong
+  private val missCount = new AtomicLong
+
+  /** The parquet dir (or file) at `path`, read without re-inferring its
+    * schema when an earlier read in this JVM already did.
+    *
+    * A plain `spark.read.parquet` infers the schema on every call, and
+    * the inference reads footers in a Spark job of its own (~90 ms on a
+    * 4-core VM, even for one file). This reader keeps a JVM-wide
+    * memo instead:
+    *
+    *  - Key: the absolute path plus the session's whole `spark.sql.*`
+    *    runtime conf, so any conf that can change inference
+    *    (`binaryAsString`, `nanosAsLong`, partition-type inference, case
+    *    sensitivity, …) gets an entry of its own without a list of
+    *    parquet confs to keep up to date.
+    *  - Value: the inferred `StructType` and the fingerprint of the files
+    *    it was inferred from, (path, length, mtime) of every leaf file.
+    *  - Hit: the read is `spark.read.schema(memo).parquet(path)`, which
+    *    lists the dir but submits no job. The fingerprint is checked
+    *    against that read's own file index, so a hit needs no second
+    *    listing.
+    *  - Miss: no entry, or a fingerprint that no longer matches (a
+    *    rewritten dir, a new `k=` partition, a deleted file), or a memo
+    *    schema the files no longer resolve under. The plain inferring
+    *    read runs and its schema and listing replace the entry.
+    *
+    * Schemas hold no session resources, so entries are shared by every
+    * session of the JVM; at most [[MemoEntries]] are kept. Known limit: a
+    * non-Spark writer that rewrites a file in place under the same name,
+    * length and mtime would be served the old schema. Spark writers name
+    * every part file afresh, so their rewrites always miss.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key: Key = (absolute(path),
+      spark.conf.getAll.filter { case (k, _) => k.startsWith("spark.sql.") })
+    val hit = Option(memo.get(key)).flatMap { case (schema, files) =>
+      // a stale schema may not even resolve (a new partition value its
+      // partition type cannot hold); that is a miss like any other
+      scala.util.Try(spark.read.schema(schema).parquet(path)).toOption
+        .filter(df => fingerprint(df).contains(files))
+    }
+    hit match {
+      case Some(df) =>
+        hitCount.incrementAndGet()
+        df
+      case None =>
+        missCount.incrementAndGet()
+        val df = spark.read.parquet(path)
+        fingerprint(df).foreach(files => memo.put(key, (df.schema, files)))
+        df
+    }
+  }
+
+  /** Schema-memo hits and misses of [[parquet]] since the JVM started. */
+  def schemaReads: (Long, Long) = (hitCount.get, missCount.get)
+
+  private def absolute(path: String): String =
+    if (new org.apache.hadoop.fs.Path(path).toUri.getScheme != null) path
+    else java.nio.file.Paths.get(path).toAbsolutePath.normalize.toString
+
+  /** The leaf files `df`'s scan lists, from the listing its file index
+    * made when the read was resolved; None for a scan with no such index.
+    */
+  private def fingerprint(df: DataFrame): Option[Fingerprint] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location }.collect {
+      case index: PartitioningAwareFileIndex =>
+        index.allFiles().map { f =>
+          (f.getPath.toString, f.getLen, f.getModificationTime)
+        }.toSet
+    }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.GraftSession
+import graft.{GraftSession, Tables}
 import graft.queries.Scratch
 
 /** CLI for the mjlog ETL (reference main.py): parse a log directory tree
@@ -64,7 +64,7 @@ object EtlMain {
       // (THROUGHPUT.md "Method").
       spark.range(64).selectExpr("id", "id % 4 AS dt")
         .write.mode("overwrite").partitionBy("dt").parquet(warm.toString)
-      spark.read.parquet(warm.toString).count()
+      Tables.parquet(spark, warm.toString).count()
       val t0 = System.nanoTime()
       if (useV2) Pipeline.runV2(spark, args(0), args(1))
       else Pipeline.run(spark, args(0), args(1))

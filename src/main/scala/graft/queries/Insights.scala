@@ -583,8 +583,8 @@ object Insights {
     // doc_id-bucketed layout both artifacts share at rest.
     val bsz = batch.groupBy("doc_id").agg(count(lit(1)).as("na"))
     val bg = batch.join(broadcast(bsz), "doc_id")
-    val xg = s.read.parquet(s"$tmp/grams")
-      .join(broadcast(s.read.parquet(s"$tmp/sizes")
+    val xg = Tables.parquet(s, s"$tmp/grams")
+      .join(broadcast(Tables.parquet(s, s"$tmp/sizes")
         .withColumnRenamed("n", "nb")), "doc_id")
     // build the shuffled-hash table from the BATCH side (one night's
     // ~10% of the corpus), probe with the stored index: the build side
@@ -893,7 +893,7 @@ object Insights {
       parsed.where(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record").as("raw_record"))
         .write.mode("overwrite").parquet(dead)
-      val quarantined = s.read.parquet(dead)
+      val quarantined = Tables.parquet(s, dead)
       parsed
         .where(col("_corrupt_record").isNull)
         .agg(

@@ -283,14 +283,16 @@ object LlmOps {
 
   val qDedupSimhashStats: Q = (s, d) => {
     import s.implicits._
-    Tables.documents(s, d)
+    val written = Tables.documents(s, d)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) => (id, simhash64(text)) }
       .toDF("doc_id", "sh")
-      .write.mode("overwrite").parquet(simhashSigPath(d))
+    written.write.mode("overwrite").parquet(simhashSigPath(d))
     // recompute downstream from the materialized file, so both engines
-    // read the exact same signature bytes
-    val sigs = s.read.parquet(simhashSigPath(d))
+    // read the exact same signature bytes; every write names its part
+    // files afresh, so the read declares the schema just written
+    // instead of inferring it again
+    val sigs = s.read.schema(written.schema).parquet(simhashSigPath(d))
     val chunks = sigs
       .select(col("doc_id"), col("sh"), explode(array((0 until 4).map(lit): _*)).as("chunk_id"))
       .select(col("doc_id"), col("sh"), col("chunk_id"),
@@ -1638,7 +1640,7 @@ object LlmOps {
     }
     val btab = s.sparkContext.broadcast(qtab)
     // stage 2: ADC over the CODES table (the floats are not read here)
-    val cand = s.read.parquet(Scratch.path("pq_codes", d))
+    val cand = Tables.parquet(s, Scratch.path("pq_codes", d))
       .as[(Long, Seq[Int])]
       .filter(_._1 != 0L)
       .map { case (id, codes) =>
@@ -2599,15 +2601,16 @@ object LlmOps {
     import s.implicits._
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text")).as[(Long, String)]
-    docs
+    val written = docs
       .flatMap { case (id, text) =>
         tokenHashes(text).zipWithIndex.map { case (h, p) => (id, p, h) }
       }
       .toDF("doc_id", "pos", "h")
-      .write.mode("overwrite").parquet(fingerprintHashPath(d))
+    written.write.mode("overwrite").parquet(fingerprintHashPath(d))
     // derive the stats FROM the materialized file — both engines then
-    // winnow the exact same bytes, and the corpus is hashed once
-    s.read.parquet(fingerprintHashPath(d))
+    // winnow the exact same bytes, and the corpus is hashed once; the
+    // read declares the schema just written (see qDedupSimhashStats)
+    s.read.schema(written.schema).parquet(fingerprintHashPath(d))
       .select(col("doc_id"), col("pos"), col("h"))
       .as[(Long, Int, Long)]
       .groupByKey(_._1)

@@ -71,7 +71,7 @@ object Maintain {
     }
     val delta =
       partials(ev.where(col("ts") >= lit(StateCutoff).cast("timestamp")))
-    s.read.parquet(s"$dir/state").unionByName(delta)
+    Tables.parquet(s, s"$dir/state").unionByName(delta)
       .groupBy("event_type", "user_id")
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
       .groupBy("event_type")
@@ -116,7 +116,7 @@ object Maintain {
       Tables.orders(s, d).repartition(8, col("o_orderkey"))
         .write.mode("overwrite").parquet(dir)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
       .withColumn("file",
         regexp_extract(input_file_name(), "([^/]+)$", 1))
       .groupBy("file")
@@ -588,9 +588,9 @@ object Maintain {
       orders.where(col("o_orderkey") % 10 === 7).select(col("o_orderkey"))
         .write.mode("overwrite").parquet(delDir)
     }
-    val base = s.read.parquet(baseDir)
-    val v2 = base.unionByName(s.read.parquet(deltaDir))
-      .join(broadcast(s.read.parquet(delDir)), Seq("o_orderkey"),
+    val base = Tables.parquet(s, baseDir)
+    val v2 = base.unionByName(Tables.parquet(s, deltaDir))
+      .join(broadcast(Tables.parquet(s, delDir)), Seq("o_orderkey"),
         "left_anti")
     def stat(df: DataFrame, v: Int) =
       df.agg(count(lit(1)).as("n_rows"),
@@ -1483,7 +1483,7 @@ object Maintain {
           Scratch.rmTree(p)
       }
     } finally listing.close()
-    val kept = s.read.parquet(lake)
+    val kept = Tables.parquet(s, lake)
       .groupBy(col("omonth").cast("string").as("omonth"))
       .agg(count(lit(1)).as("n_rows"))
       .withColumn("status", lit("kept"))

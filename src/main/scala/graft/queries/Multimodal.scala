@@ -351,7 +351,7 @@ object Multimodal {
     Seeds.once("media_lake", tmp) {
       genSyntheticMedia(spark, dir).write.mode("overwrite").parquet(tmp)
     }
-    spark.read.parquet(tmp)
+    Tables.parquet(spark, tmp)
       .as[MediaRow](org.apache.spark.sql.Encoders.product[MediaRow])
   }
 

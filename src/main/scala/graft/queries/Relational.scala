@@ -95,7 +95,7 @@ object Relational {
       .repartition(col("l_returnflag"), pmod(col("l_orderkey"), lit(8)))
       .drop("l_orderkey")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
-    s.read.parquet(tmp)
+    Tables.parquet(s, tmp)
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("cnt"), dsum(col("l_extendedprice")).as("sum_price"))
       .orderBy("l_returnflag")
@@ -135,10 +135,10 @@ object Relational {
         .repartition(4)
         .write.mode("overwrite").partitionBy("month").parquet(frag)
     }
-    s.read.parquet(frag)
+    Tables.parquet(s, frag)
       .repartition(col("month"))
       .write.mode("overwrite").partitionBy("month").parquet(tidy)
-    s.read.parquet(tidy)
+    Tables.parquet(s, tidy)
       .groupBy("month")
       .agg(count(lit(1)).as("cnt"), dsum(col("o_totalprice")).as("sum_price"))
       .orderBy("month")
@@ -941,7 +941,7 @@ object Relational {
         ("4-NOT SPECIFIED", "low"), ("5-LOW", "low")).toDF("prio", "tier")
         .write.mode("overwrite").parquet(s"$base/dim")
     }
-    val dim = s.read.parquet(s"$base/dim")
+    val dim = Tables.parquet(s, s"$base/dim")
     s.table(tbl)
       .join(broadcast(dim), col("o_orderpriority") === col("prio"))
       .where(col("tier") === "high")

@@ -869,7 +869,7 @@ object StreamingQ {
                                   buckets: Set[Int]): Option[DataFrame] =
     buckets.filter(manifest.contains).groupBy(manifest).toSeq.sortBy(_._1)
       .map { case (ver, bs) =>
-        s.read.parquet(base.resolve(s"v$ver").toString)
+        Tables.parquet(s, base.resolve(s"v$ver").toString)
           .where(col("bucket").isin(bs.toSeq.sorted: _*))
       }
       .reduceOption(_.union(_))
