@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -788,12 +789,13 @@ object Insights {
     * plain aggregate query. The oracle computes the same totals in one
     * statement; the hash-pass proves the scripted fold is lossless.
     */
-  val qSqlScript: Q = (s, d) => {
-    // snapshot/restore the scripting flag (same discipline as the
-    // streaming replay harness's shuffle-partition restore) and drop the
-    // script's cached table even on a mid-script failure, so nothing
-    // leaks into the shared session
-    val prev = s.conf.getOption("spark.sql.scripting.enabled")
+  val qSqlScript: Q = (caller, d) => {
+    // scripting is enabled on a clone of the caller's session, so the
+    // caller's conf is never written and the returned frame belongs to
+    // the clone. The script's cached table is dropped even on a
+    // mid-script failure: the cache manager is shared by every session
+    // of the application, clones included
+    val s = GraftShim.cloneSession(caller)
     s.conf.set("spark.sql.scripting.enabled", "true")
     try {
       Tables.orders(s, d).createOrReplaceTempView("graft_orders_script")
@@ -828,10 +830,6 @@ object Insights {
             s.catalog.isCached("graft_orders_script"))
           s.catalog.uncacheTable("graft_orders_script")
       } catch { case _: Exception => }
-      prev match {
-        case Some(v) => s.conf.set("spark.sql.scripting.enabled", v)
-        case None    => s.conf.unset("spark.sql.scripting.enabled")
-      }
     }
   }
 

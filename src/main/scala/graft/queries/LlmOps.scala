@@ -1542,27 +1542,34 @@ object LlmOps {
   /** Train the codebook on a bounded sample (vec_id % step = 0, step
     * sized so the sample stays ~[[PqTrainTarget]] rows as the corpus
     * grows — training cost is CONSTANT in corpus size, the faiss
-    * recipe), materialize it to scratch parquet for the DuckDB replay,
-    * and return it for the in-process kernels.
+    * recipe). Sample and training are deterministic, so the codebook is
+    * a once-per-dir seed: the first call trains it and writes it to
+    * scratch parquet (which the DuckDB replay also reads); every call
+    * reads the [[PqSubspaces]] × [[PqCodes]] centroid rows back for the
+    * in-process kernels.
     */
   private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Long]]] = {
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
-    val n = emb.count()
-    val step = math.max(1L, n / PqTrainTarget)
-    val sample = emb.filter(_._1 % step == 0)
-      .map { case (id, v) => (id, pqQuantize(v)) }
-      .collect()
-    val cb = pqTrain(sample)
-    val rows = for {
-      sub <- 0 until PqSubspaces
-      code <- 0 until PqCodes
-    } yield (sub, code, cb(sub)(code).toSeq)
-    rows.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(Scratch.path("pq_codebook", d))
+    val dir = Scratch.path("pq_codebook", d)
+    Seeds.once("pq_codebook", dir) {
+      val emb = Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+        .as[(Long, Seq[Float])]
+      val step = math.max(1L, emb.count() / PqTrainTarget)
+      val sample = emb.filter(_._1 % step == 0)
+        .map { case (id, v) => (id, pqQuantize(v)) }
+        .collect()
+      val cb = pqTrain(sample)
+      val rows = for {
+        sub <- 0 until PqSubspaces
+        code <- 0 until PqCodes
+      } yield (sub, code, cb(sub)(code).toSeq)
+      rows.toDF("sub", "code", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
+    val cb = Array.fill(PqSubspaces, PqCodes)(Array.emptyLongArray)
+    Tables.parquet(s, dir).as[(Int, Int, Seq[Long])].collect()
+      .foreach { case (sub, code, c) => cb(sub)(code) = c.toArray }
     cb
   }
 

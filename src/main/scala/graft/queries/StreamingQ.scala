@@ -3,8 +3,10 @@ package graft.queries
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
@@ -104,6 +106,13 @@ class RunningCumulProcessor
   * across executors by groupBy hash; watermarks bound state size, and
   * `dropDuplicatesWithinWatermark` exists precisely so the dedup state
   * doesn't grow unboundedly.
+  *
+  * Every true-stream key sets its confs on its own clone of the caller's
+  * session ([[replaySession]]); the caller's conf is never written. The
+  * returned DataFrame belongs to that clone: conf the caller sets after
+  * the call does not apply to it, and a view made with
+  * `createOrReplaceTempView` is registered on the clone, not on the
+  * caller's session.
   */
 object StreamingQ {
 
@@ -179,7 +188,7 @@ object StreamingQ {
     * the r17 SessProbe matrix measured per-batch fixed cost
     * (walCommit/offsets/planning + store commit) as ~40% of this key.
     */
-  val qStreamSession: Q = (s, d) => withRocksDb(s) {
+  val qStreamSession: Q = (s, d) =>
     // fed by the DISTRIBUTED week-file replay (executors read the
     // batches; the driver only admits files) — the far-future sentinel
     // is in the last trigger, so every real session finalizes exactly
@@ -188,7 +197,8 @@ object StreamingQ {
     // files-per-trigger in the r17 probe)
     runFileReplayStream(s, "graft_stream_session", d,
                         filesPerTrigger = 3,
-                        rowsPerStatePartition = 12500L) { df =>
+                        rowsPerStatePartition = 12500L,
+                        confs = RocksDbConfs) { df =>
       df.withWatermark("ts", "30 minutes")
         .groupBy(col("user_id"),
                  session_window(col("ts"), "30 minutes").as("w"))
@@ -199,7 +209,6 @@ object StreamingQ {
                 col("cnt"), col("sum_value"))
     }.where(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start")
-  }
 
   /** TRUE streaming COUNT(DISTINCT) — two CHAINED stateful windowed
     * aggregations (Spark 4's multiple-stateful-operator support, which
@@ -281,26 +290,105 @@ object StreamingQ {
     ev(6, "2024-01-01 10:30:00", 1, "click", 99.0), // too late — dropped
     ev(7, "2024-01-01 14:30:00", 2, "view", 6.0))   // advances wm past 12:xx
 
-  private def runMemoryStream(s: SparkSession, name: String)
+  private def runMemoryStream(s: SparkSession, name: String,
+                              confs: Seq[(String, String)] = Nil)
                              (build: DataFrame => DataFrame): DataFrame =
-    runReplayStream(s, name, Seq(batch1, batch2, batch3))(build)
+    runReplayStream(s, name, Seq(batch1, batch2, batch3), confs)(build)
 
   private def runReplayStream(s: SparkSession, name: String,
-                              batches: Seq[Seq[Ev]])
+                              batches: Seq[Seq[Ev]],
+                              confs: Seq[(String, String)] = Nil)
                              (build: DataFrame => DataFrame): DataFrame =
-    runReplayStreams(s, name, Seq(batches))(dfs => build(dfs.head))
+    runReplayStreams(s, name, Seq(batches), confs)(dfs => build(dfs.head))
+
+  /** Confs of the replay and fixture checkpoints, per-call scratch that
+    * is deleted when its query stops (a durable checkpoint keeps Spark's
+    * defaults):
+    *  - no checksum companion per checkpoint file (offsets, commits, state
+    *    deltas): 2x the metadata file ops for files no restart reads,
+    *    ~20% of every streaming key's wall time at sf0.1
+    *    (StreamFixedCostProbe, OPTIMIZATION_r18.md), identical rows;
+    *  - checkpoint files written through java.nio, not Hadoop's
+    *    FileContext, whose local create forks a `chmod` per file without
+    *    libhadoop (~89 ms vs 0.3 ms, CkptFsProbe;
+    *    [[graft.streaming.NioCheckpointFileManager]]).
+    */
+  private[graft] val EphemeralCkptConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.NioCheckpointFileManager].getName)
+
+  /** State-store confs of the keys that run on RocksDB: the provider,
+    * and changelog checkpointing, so each commit uploads the batch's
+    * delta instead of a full SST snapshot (the per-commit upload was
+    * the dominant session-window cost at sf1; the state itself is small,
+    * the cadence of full snapshots was not).
+    */
+  private[graft] val RocksDbConfs: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      "true")
+
+  /** The clone of `s` one replay runs on, with [[EphemeralCkptConfs]]
+    * and `confs`. `s` is never written.
+    */
+  private def replaySession(s: SparkSession,
+                            confs: Seq[(String, String)]): SparkSession = {
+    val c = GraftShim.cloneSession(s)
+    (EphemeralCkptConfs ++ confs).foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Start a stream on replay clone `c` with `parts` shuffle partitions,
+    * the state-store count. The query fixes it when it starts, on its own
+    * clone of `c`'s conf; `c` then goes back to the count it copied from
+    * the caller, so the batch work on the stream's output (sink reads,
+    * sorts, the backfill history) plans at the caller's count.
+    */
+  private def startWithStores(c: SparkSession, parts: Long)
+                             (start: => StreamingQuery): StreamingQuery = {
+    val callerParts = c.conf.get(ShufflePartitions)
+    c.conf.set(ShufflePartitions, parts.toString)
+    val q = start
+    c.conf.set(ShufflePartitions, callerParts)
+    q
+  }
+
+  /** Start a replay on `c` with `start(checkpointDir)` on a fresh
+    * checkpoint dir ([[startWithStores]] with `parts`), run it with
+    * `drive`, then stop it and delete the dir; the results live in the
+    * sink. The dir is on tmpfs when there is one: each micro-batch
+    * fsyncs its logs, which dominates a short replay, and the replay
+    * needs determinism, not durability.
+    */
+  private def runOnScratchCkpt(c: SparkSession, parts: Long, name: String)
+                              (start: String => StreamingQuery)
+                              (drive: StreamingQuery => Unit): Unit = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val base =
+      if (java.nio.file.Files.isDirectory(shm)) shm
+      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val ckpt = java.nio.file.Files.createTempDirectory(base, s"graft_ckpt_${name}_")
+    try {
+      val q = startWithStores(c, parts)(start(ckpt.toString))
+      try drive(q) finally q.stop()
+    } finally try Scratch.rmTree(ckpt) catch { case _: Exception => }
+  }
 
   /** N-source replay: stream i consumes `perStream(i)`; batch k of every
     * stream is added before one processAllAvailable, so watermarks
     * advance in lockstep across sources (what a shared event-time clock
-    * does in production).
+    * does in production). Runs on a [[replaySession]] with `confs`; the
+    * returned memory-sink table belongs to that clone.
     */
   private[graft] def runReplayStreams(s: SparkSession, name: String,
-                                      perStream: Seq[Seq[Seq[Ev]]])
+                                      perStream: Seq[Seq[Seq[Ev]]],
+                                      confs: Seq[(String, String)] = Nil)
                                      (build: Seq[DataFrame] => DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     // state-store partition count follows shuffle partitions at query
     // start; size it to the REPLAY VOLUME the way production sizes it
     // to key cardinality: 3 hand-placed fixture batches don't need 32
@@ -309,50 +397,27 @@ object StreamingQ {
     // capped at 8. Measured honestly: only ~6% at sf1 — the replay's
     // driver-resident MemoryStream feed dominates there, not state
     // parallelism — but the sizing is what a real multi-partition
-    // source would want, and it keeps the fixture path at 2. Restored
-    // after the run; results are partition-count-invariant
-    // (ShuffleInvarianceSpec pins that for every key).
+    // source would want, and it keeps the fixture path at 2. Set on the
+    // replay's clone for the query's start only ([[startWithStores]]);
+    // results are partition-count-invariant.
     val totalRows = perStream.iterator.flatMap(_.iterator.map(_.length)).sum
-    val parts = math.max(1, math.min(8, totalRows / 100000)).toString
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    try withEphemeralCkpt(s) {
-      val streams = perStream.map(_ => MemoryStream[Ev])
-      // checkpoint (offset/commit logs, state snapshots) on tmpfs when
-      // available: each micro-batch fsyncs the logs, and for a 3-batch
-      // semantics check those fsyncs dominate wall time. Real deployments
-      // point this at durable storage — the fixture needs determinism,
-      // not durability.
-      val ckptBase =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-          java.nio.file.Paths.get("/dev/shm")
-        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(ckptBase, s"graft_ckpt_${name}_")
-      val q = build(streams.map(_.toDF()))
+    val c = replaySession(s, confs)
+    val streams = perStream.map(_ =>
+      MemoryStream[Ev](org.apache.spark.sql.Encoders.product[Ev], c.sqlContext))
+    runOnScratchCkpt(c, math.max(1, math.min(8, totalRows / 100000)), name) { ckpt =>
+      build(streams.map(_.toDF()))
         .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append).start()
-      try {
-        val rounds = perStream.map(_.length).max
-        (0 until rounds).foreach { k =>
-          streams.zip(perStream).foreach { case (ms, batches) =>
-            if (k < batches.length && batches(k).nonEmpty) ms.addData(batches(k))
-          }
-          q.processAllAvailable()
+    } { q =>
+      (0 until perStream.map(_.length).max).foreach { k =>
+        streams.zip(perStream).foreach { case (ms, batches) =>
+          if (k < batches.length && batches(k).nonEmpty) ms.addData(batches(k))
         }
-      } finally {
-        q.stop()
-        // the memory-sink table keeps the results; the checkpoint is scrap
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Exception => }
+        q.processAllAvailable()
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    }
+    c.table(name)
   }
 
   /** Watermark + tumbling window in append mode: only windows the
@@ -453,23 +518,18 @@ object StreamingQ {
 
   /** Run `build` over the week-file replay of `d`'s events as a real
     * file-source stream (one weekly file per micro-batch, AvailableNow),
-    * results into a memory sink named `name`. State-store partition
-    * sizing and checkpoint placement mirror [[runReplayStreams]].
+    * results into a memory sink named `name`. Runs on a
+    * [[replaySession]] with `confs`, as [[runReplayStreams]] does.
     */
   private def runFileReplayStream(s: SparkSession, name: String, d: String,
                                   filesPerTrigger: Int = 1,
-                                  rowsPerStatePartition: Long = 100000L)
+                                  rowsPerStatePartition: Long = 100000L,
+                                  confs: Seq[(String, String)] = Nil)
                                  (build: DataFrame => DataFrame): DataFrame =
     runFileReplayStreamsN(s, name, d, filesPerTrigger, 1,
-                          rowsPerStatePartition)(dfs => build(dfs.head))
+                          rowsPerStatePartition, confs)(dfs => build(dfs.head))
 
-  /** N independent file-source readers over the same seeded week files
-    * — the two-stream (join) form of the distributed replay: each
-    * source admits the same files per trigger, so the micro-batches
-    * stay aligned the way the MemoryStream harness aligned its batch
-    * lists, but EXECUTORS do the reading on every side.
-    */
-  /** Memoized per (session, dir) row count of `events` — it only sizes
+  /** Row count of `events`, memoized per data dir — it only sizes
     * the replay's state-store partition count, and before memoization
     * every rep of every file-replay key paid a fresh count job for the
     * same answer (~12 keys × 3 reps of pure overhead per bench run).
@@ -483,9 +543,16 @@ object StreamingQ {
     eventCountMemo.computeIfAbsent(d,
       _ => java.lang.Long.valueOf(Tables.events(s, d).count())).longValue()
 
+  /** N independent file-source readers over the same seeded week files
+    * — the two-stream (join) form of the distributed replay: each
+    * source admits the same files per trigger, so the micro-batches
+    * stay aligned the way the MemoryStream harness aligned its batch
+    * lists, but EXECUTORS do the reading on every side.
+    */
   private def runFileReplayStreamsN(s: SparkSession, name: String, d: String,
                                     filesPerTrigger: Int, n: Int,
-                                    rowsPerStatePartition: Long = 100000L)
+                                    rowsPerStatePartition: Long = 100000L,
+                                    confs: Seq[(String, String)] = Nil)
                                    (build: Seq[DataFrame] => DataFrame): DataFrame = {
     val dir = eventWeekFiles(s, d)
     val totalRows = eventCount(s, d)
@@ -501,36 +568,23 @@ object StreamingQ {
     // Output invariance to the store count is pinned by the manual
     // SessProbe/oracle verification (1/3/6-fpt identical outputs) plus
     // the per-key oracle hashes — the ShuffleInvarianceSpec sweep
-    // varies the SESSION conf, which this override shadows for replay
-    // keys (r17 ADVICE).
-    val parts =
-      math.max(1, math.min(8, totalRows / rowsPerStatePartition)).toString
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    try withEphemeralCkpt(s) {
-      val ckptBase =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-          java.nio.file.Paths.get("/dev/shm")
-        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(ckptBase, s"graft_ckpt_${name}_")
-      val srcs = Seq.fill(n)(s.readStream
+    // varies the CALLER's count, which reaches the batch work on the
+    // stream's output but not this store count (r17 ADVICE).
+    val c = replaySession(s, confs)
+    runOnScratchCkpt(c, math.max(1, math.min(8, totalRows / rowsPerStatePartition)),
+                     name) { ckpt =>
+      val srcs = Seq.fill(n)(c.readStream
         .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
         .parquet(s"$dir/w*.parquet"))
-      val q = build(srcs)
+      build(srcs)
         .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      finally {
-        q.stop()
-        try Scratch.rmTree(ckpt) catch { case _: Exception => }
-      }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+    }(_.awaitTermination())
+    c.table(name)
   }
 
   /** Exact cents of a 2-decimal value — the running total accumulates
@@ -962,34 +1016,26 @@ object StreamingQ {
     val base = java.nio.file.Paths.get(Relational.scratchDir("mv", d))
     Scratch.rmTree(base) // stale versions from a previous suite shape
     java.nio.file.Files.createDirectories(base)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
+    val c = replaySession(s, Nil)
     @volatile var lastV = 0L
-    try withEphemeralCkpt(s) {
-      val ckptBase =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-          java.nio.file.Paths.get("/dev/shm")
-        else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_mv_")
-      val src = s.readStream
+    runOnScratchCkpt(c, 2, "mv") { ckpt =>
+      val src = c.readStream
         .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
         .option("maxFilesPerTrigger", "2")
         .parquet(s"$dir/w*.parquet")
-      val q = mvAggregate(src)
+      mvAggregate(src)
         .writeStream
         .foreachBatch { (updates: DataFrame, batchId: Long) =>
           mvMergeBatch(base)(updates, batchId)
           lastV = batchId + 1
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Update)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      finally { q.stop(); Scratch.rmTree(ckpt) }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    mvRead(s, base, lastV).where(col("user_id") >= 0).orderBy("user_id")
+    }(_.awaitTermination())
+    mvRead(c, base, lastV).where(col("user_id") >= 0).orderBy("user_id")
   }
 
   val qStreamMvSql: String =
@@ -1027,23 +1073,21 @@ object StreamingQ {
     val ckpt = java.nio.file.Paths.get(Relational.scratchDir("stinsp", d))
     Scratch.rmTree(ckpt)
     java.nio.file.Files.createDirectories(ckpt)
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try withEphemeralCkpt(s) {
-      val src = s.readStream
-        .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(s"$dir/w*.parquet")
-      val q = mvAggregate(src)
+    val c = replaySession(s, Nil)
+    val q = startWithStores(c, 2) {
+      mvAggregate(c.readStream
+          .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
+          .option("maxFilesPerTrigger", "2")
+          .parquet(s"$dir/w*.parquet"))
         .writeStream.format("noop")
         .option("checkpointLocation", ckpt.toString)
         .outputMode(OutputMode.Update)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.read.format("statestore").option("path", ckpt.toString).load()
+    }
+    try q.awaitTermination()
+    finally q.stop()
+    c.read.format("statestore").option("path", ckpt.toString).load()
       .select(col("key.user_id").as("user_id"),
               col("value.count").as("n_events"),
               (col("value.sum").cast("double") / lit(100.0)).as("total"))
@@ -1053,75 +1097,21 @@ object StreamingQ {
 
   val qStreamStateInspectSql: String = qStreamMvSql
 
-  /** Scoped config for the replay/fixture checkpoints, which are
-    * per-invocation scratch on tmpfs, deleted at query stop. Spark 4.1
-    * writes a companion checksum file for EVERY checkpoint file
-    * (offsets, commits, state deltas) — integrity insurance for durable
-    * remote checkpoints, but pure per-batch overhead (2× the metadata
-    * file ops) for an ephemeral local dir that no restart will ever
-    * read. Measured at sf0.1: ~20% of every streaming key's wall time
-    * (StreamFixedCostProbe matrix, OPTIMIZATION_r18.md) with identical
-    * emitted rows. Parameterized: a durable-checkpoint deployment sets
-    * SPARK_GRAFT_CKPT_CHECKSUM=true (or just doesn't route its query
-    * through this scratch harness) to keep the default integrity
-    * behavior.
-    */
-  private[graft] def withEphemeralCkpt[A](s: SparkSession)(body: => A): A = {
-    // both confs exist because these checkpoints are EPHEMERAL and LOCAL
-    // (tmpfs/tmpdir, deleted after the run): (1) skip the per-file
-    // checksum companions no restart will verify; (2) write the
-    // offset/commit/state files through java.nio instead of Hadoop's
-    // FileContext, whose local-FS create forks a `chmod` per file when
-    // libhadoop is absent (~89 ms vs 0.3 ms per metadata write,
-    // CkptFsProbe) — see NioCheckpointFileManager. Production
-    // checkpoints on durable shared storage use the default manager;
-    // env overrides restore it here too.
-    val confs = Seq(
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"),
-      "spark.sql.streaming.checkpointFileManagerClass" ->
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-          "graft.streaming.NioCheckpointFileManager"))
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => if (v.nonEmpty) s.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, old) =>
-      old.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
-
-  private[graft] def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      // changelog checkpointing: each commit uploads the batch's delta
-      // instead of a full SST snapshot — the per-commit upload was the
-      // dominant session-window cost at sf1 (the state itself is small;
-      // the cadence of full snapshots was not)
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, old) =>
-      old.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
-
   /** Hand-placed 3-batch fixture form (StreamingSpec asserts it emits
     * the same rows as [[qStreamStatefulFixture]]); the ORACLED gate
     * entry is [[qStreamStatefulTws]].
     */
-  private[graft] val qStreamStatefulTwsFixture: Q = (s, _) =>
-    withRocksDb(s) {
-      import s.implicits._
-      runMemoryStream(s, "graft_stream_tws_fx") { df =>
-        df.as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningCountProcessor(),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Append)
-          .toDF()
-      }
+  private[graft] val qStreamStatefulTwsFixture: Q = (s, _) => {
+    import s.implicits._
+    runMemoryStream(s, "graft_stream_tws_fx", RocksDbConfs) { df =>
+      df.as[Ev]
+        .groupByKey(_.user_id)
+        .transformWithState(new RunningCountProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Append)
+        .toDF()
     }.orderBy("user_id", "n")
+  }
 
   /** transformWithState on the SAME week-batched replay of `events` as
     * [[qStreamStateful]], with the same cents-exact running state (the
@@ -1129,22 +1119,21 @@ object StreamingQ {
     * so the successor stateful API is hash-compared against the same
     * cumulative-window oracle instead of rows-only.
     */
-  val qStreamStatefulTws: Q = (s, d) =>
-    withRocksDb(s) {
-      import s.implicits._
-      // DISTRIBUTED week-file replay, one weekly file per micro-batch —
-      // same batching (and so the same emission set) as the oracle's
-      // cumulative-window SQL expects; the sentinel's synthetic user −1
-      // emission is filtered below
-      runFileReplayStream(s, "graft_stream_tws", d) { df =>
-        df.as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new RunningCumulProcessor(),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Append)
-          .toDF()
-      }
+  val qStreamStatefulTws: Q = (s, d) => {
+    import s.implicits._
+    // DISTRIBUTED week-file replay, one weekly file per micro-batch —
+    // same batching (and so the same emission set) as the oracle's
+    // cumulative-window SQL expects; the sentinel's synthetic user −1
+    // emission is filtered below
+    runFileReplayStream(s, "graft_stream_tws", d, confs = RocksDbConfs) { df =>
+      df.as[Ev]
+        .groupByKey(_.user_id)
+        .transformWithState(new RunningCumulProcessor(),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Append)
+        .toDF()
     }.where(col("user_id") >= 0).orderBy("user_id", "n")
+  }
 
   /** Event-time micros of a timestamp (getTime is millis — the events
     * table carries microsecond precision, and a gap compare that
@@ -1521,11 +1510,6 @@ object StreamingQ {
     */
   val qStreamBackfill: Q = (s, d) => {
     val cutoff = lit(BackfillCutoff).cast("timestamp")
-    val hist = Tables.events(s, d)
-      .where(col("ts") < cutoff)
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).as("sv"))
     val tail = runFileReplayStream(s, "graft_stream_backfill", d,
                                    filesPerTrigger = 3) { df =>
       df.where(col("ts") >= cutoff)
@@ -1538,6 +1522,12 @@ object StreamingQ {
     }.where(col("event_type") =!= "wm_flush")
       .select(col("event_type"), to_date(col("wstart")).as("day"),
         col("n"), col("sv"))
+    // history read on the replay's clone, so the result belongs to it
+    val hist = Tables.events(tail.sparkSession, d)
+      .where(col("ts") < cutoff)
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 2))).as("sv"))
     hist.unionByName(tail)
       .groupBy("event_type", "day")
       .agg(sum(col("n")).as("n"),

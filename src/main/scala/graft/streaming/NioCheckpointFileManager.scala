@@ -19,10 +19,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * 0.27 ms through java.nio (CkptFsProbe), and walCommit+commitOffsets
   * alone were ~100 ms of every micro-batch (StreamFixedCostProbe).
   *
-  * Scope: registered per-query via
-  * `spark.sql.streaming.checkpointFileManagerClass` ONLY for the
-  * ephemeral local checkpoints of the replay/fixture streaming keys
-  * (StreamingQ.withEphemeralCkpt); a production deployment checkpoints
+  * Scope: registered via `spark.sql.streaming.checkpointFileManagerClass`
+  * ONLY on the per-call session clones that run the ephemeral local
+  * checkpoints of the replay/fixture streaming keys
+  * (StreamingQ.EphemeralCkptConfs); a production deployment checkpoints
   * to durable shared storage, where the default manager (or the object
   * store's) is the right choice and this class is never installed.
   *

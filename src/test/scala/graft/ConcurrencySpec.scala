@@ -33,4 +33,26 @@ class ConcurrencySpec extends AnyFunSuite {
       assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
     }
   }
+
+  /** Streaming keys set their shuffle-partition count and state-store
+    * confs on a clone of the caller's session, so they can share the
+    * session with batch keys running at the same time: neither side
+    * plans under the other's settings.
+    */
+  test("streaming keys run concurrently with batch keys, each result " +
+       "as in its sequential run") {
+    val keys = Seq("q_stream_session", "q_stream_mv", "q_stream_stateful",
+                   "q_agg_group", "q_win_rank", "q_join_broadcast")
+    val sequential = keys.map { n =>
+      n -> SparkEntry.queries(n)(spark, sf).collect().toSeq
+    }.toMap
+    val futures = keys.map { n =>
+      Future(n -> SparkEntry.queries(n)(spark, sf).collect().toSeq)
+    }
+    val concurrent = Await.result(Future.sequence(futures), 300.seconds).toMap
+    keys.foreach { n =>
+      assert(concurrent(n).nonEmpty, n)
+      assert(concurrent(n) == sequential(n), s"$n diverged under concurrency")
+    }
+  }
 }

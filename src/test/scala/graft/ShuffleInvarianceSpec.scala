@@ -32,40 +32,30 @@ class ShuffleInvarianceSpec extends AnyFunSuite {
 
   private val LayoutDependent = Set.empty[String]
 
-  /** Queries that mutate shared session conf mid-run (shuffle
-    * partitions, state-store provider) — executed sequentially so a
-    * concurrent pure query never plans under their temporary settings.
-    */
-  private def confMutating(k: String): Boolean =
-    k.startsWith("q_stream_") || k == "q_mahjong_stream_parity" ||
-      k == "q_sql_script"
-
   private def runKeys(dir: String,
                       keys: String => Boolean): Map[String, Seq[String]] = {
     val selected = SparkEntry.queries.toSeq.collect {
       case (k, fn) if keys(k) && !LayoutDependent(k) => (k, fn)
     }
-    val (seq, par) = selected.partition { case (k, _) => confMutating(k) }
     // the sweep reruns every key 4×; at sf0.001 each run is dominated by
     // per-query fixed cost (planning + a few tiny jobs), so overlapping
     // independent queries from a small driver pool back-fills the idle
     // scheduler gaps (guide §2.6) without touching per-key semantics —
     // jobs submitted from different threads share the session and the
     // pass's shuffle.partitions setting, which is set before the pool
-    // starts and restored after it drains
+    // starts and restored after it drains. No key writes the session's
+    // conf (the streaming and scripting keys set theirs on a clone of
+    // it), so every key runs through the pool
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = Executors.newFixedThreadPool(3)
     try {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val parOut = Future.traverse(par) { case (k, fn) =>
+      val out = Future.traverse(selected) { case (k, fn) =>
         Future(k -> fn(spark, dir).collect().map(_.toString).toSeq)
       }
-      val seqOut = seq.map { case (k, fn) =>
-        k -> fn(spark, dir).collect().map(_.toString).toSeq
-      }
-      (Await.result(parOut, Duration.Inf) ++ seqOut).toMap
+      Await.result(out, Duration.Inf).toMap
     } finally pool.shutdown()
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.classic.GraftShim
+
 import graft.queries.{Scratch, StreamingQ}
 
 /** Golden assertions for the true-stream semantics (watermark, dedup,
@@ -25,39 +27,41 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.{col, count, lit, session_window}
     import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    StreamingQ.withRocksDb(spark) {
-      assert(spark.conf.get(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-        == "true")
-      val ms = MemoryStream[Ev]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_rocks_metrics_")
-      val q = ms.toDF()
-        .withWatermark("ts", "30 minutes")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName("graft_rocks_metrics")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(OutputMode.Append).start()
-      try {
-        def ev(id: Long, t: String) =
-          Ev(id, Timestamp.valueOf(t), 1L, "click", 1.0)
-        ms.addData(Seq(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:10:00")))
-        q.processAllAvailable()
-        ms.addData(Seq(ev(3, "2024-01-01 13:00:00")))
-        q.processAllAvailable()
-        val withState = q.recentProgress
-          .flatMap(_.stateOperators).filter(_.numRowsTotal > 0)
-        assert(withState.nonEmpty, "no state-operator progress reported")
-        import scala.jdk.CollectionConverters._
-        val metrics = withState.flatMap(_.customMetrics.asScala).toMap
-        val commitMetrics = metrics.keys
-          .filter(k => k.startsWith("rocksdb") && k.toLowerCase.contains("commit"))
-        assert(commitMetrics.nonEmpty,
-          s"expected named rocksdb commit metrics, got ${metrics.keys.toSeq.sorted}")
-      } finally { q.stop(); Scratch.rmTree(ckpt) }
-    }
+    // the query runs on a clone with the confs the RocksDB keys pass to
+    // their replay, as those keys do
+    val c = GraftShim.cloneSession(spark)
+    StreamingQ.RocksDbConfs.foreach { case (k, v) => c.conf.set(k, v) }
+    import c.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = c.sqlContext
+    assert(c.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+      == "true")
+    val ms = MemoryStream[Ev]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_rocks_metrics_")
+    val q = ms.toDF()
+      .withWatermark("ts", "30 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("cnt"))
+      .writeStream.format("memory").queryName("graft_rocks_metrics")
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode(OutputMode.Append).start()
+    try {
+      def ev(id: Long, t: String) =
+        Ev(id, Timestamp.valueOf(t), 1L, "click", 1.0)
+      ms.addData(Seq(ev(1, "2024-01-01 10:00:00"), ev(2, "2024-01-01 10:10:00")))
+      q.processAllAvailable()
+      ms.addData(Seq(ev(3, "2024-01-01 13:00:00")))
+      q.processAllAvailable()
+      val withState = q.recentProgress
+        .flatMap(_.stateOperators).filter(_.numRowsTotal > 0)
+      assert(withState.nonEmpty, "no state-operator progress reported")
+      import scala.jdk.CollectionConverters._
+      val metrics = withState.flatMap(_.customMetrics.asScala).toMap
+      val commitMetrics = metrics.keys
+        .filter(k => k.startsWith("rocksdb") && k.toLowerCase.contains("commit"))
+      assert(commitMetrics.nonEmpty,
+        s"expected named rocksdb commit metrics, got ${metrics.keys.toSeq.sorted}")
+    } finally { q.stop(); Scratch.rmTree(ckpt) }
   }
 
   test("watermark append: closed windows emitted, too-late row dropped") {
@@ -661,5 +665,58 @@ class StreamingSpec extends AnyFunSuite {
       s"last-writer-wins by ts: ${out(1L)}")
     assert(out(3L) == (("signup", 5.0, "2024-01-05 10:00:02.0")),
       s"ts tie breaks to the higher event_id: ${out(3L)}")
+  }
+
+  /** A replay's confs go on its own clone: a caller's conf never holds
+    * them, not even while the call runs. The session key writes both a
+    * shuffle-partition count and the RocksDB provider, so a caller that
+    * shares its session with other queries would plan them under those
+    * settings for the whole replay if either landed on it.
+    */
+  test("q_stream_session never writes the caller's conf, not even while " +
+       "it runs") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val caller = spark.newSession()
+    val watched = Seq("spark.sql.shuffle.partitions",
+                      "spark.sql.streaming.stateStore.providerClass")
+    def sample() = watched.map(caller.conf.getOption)
+    val before = sample()
+    val run = Future(StreamingQ.entries("q_stream_session")(
+      caller, "/root/testdata/sf0.001").collect())
+    val seen = scala.collection.mutable.LinkedHashSet(before)
+    var samples = 0
+    while (!run.isCompleted) { seen += sample(); samples += 1; Thread.sleep(1) }
+    Await.result(run, 5.minutes)
+    seen += sample()
+    assert(samples > 0)
+    assert(seen.toSeq == Seq(before),
+      s"the caller's ${watched.mkString(", ")} moved during the call: $seen")
+  }
+
+  /** The replay's state-store count is set on its clone only while its
+    * query starts: the batch work on the stream's output (sink reads,
+    * sorts, the backfill history) plans at the caller's count, so a
+    * caller's shuffle-partition setting still reaches it.
+    */
+  test("every StreamingQ entry and q_sql_script leave the caller's conf " +
+       "as it was and plan their result at the caller's partition count") {
+    // a caller whose conf no earlier test has touched, at a count no
+    // replay sizes its state stores to
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val before = caller.conf.getAll.toSet
+    // conf entries the caller gained, lost or changed since `before`
+    def written = { val now = caller.conf.getAll.toSet; (now diff before) ++ (before diff now) }
+    val keys = StreamingQ.entries.toSeq.sortBy(_._1) :+
+      ("q_sql_script" -> graft.queries.Insights.qSqlScript)
+    keys.foreach { case (k, q) =>
+      val df = q(caller, "/root/testdata/sf0.001")
+      df.collect()
+      assert(written.isEmpty, s"$k wrote the caller's conf")
+      assert(df.sparkSession.conf.get("spark.sql.shuffle.partitions") == "7",
+        s"$k's result plans at another shuffle-partition count than the caller's")
+    }
   }
 }
