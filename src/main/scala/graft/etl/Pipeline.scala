@@ -277,16 +277,14 @@ object Pipeline {
     // 14 MB / 2000-file corpus bin-packs into 1-2 scan tasks and the
     // parse serializes onto 1-2 of the 32 cores
     s.conf.set("spark.sql.files.openCostInBytes", (64 * 1024).toString)
-    // pack-granularity knobs, overridable for ops tuning and the
-    // THROUGHPUT.md bin-pack experiments: minPartitionNum drives
-    // bytesPerCore in the split policy (both the binaryFile scan and
-    // the mjlog DSv2 packer honor it), so raising it shrinks packs —
-    // more, smaller scan tasks to absorb per-file parse-cost variance
+    // pack granularity: minPartitionNum drives bytesPerCore in the
+    // split policy (both the binaryFile scan and the mjlog DSv2 packer
+    // honor it), so 2 packs per core leave more, smaller scan tasks to
+    // absorb per-file parse-cost variance. A caller's
+    // maxPartitionBytes reaches the run through the clone's copy of its
+    // conf.
     s.conf.set("spark.sql.files.minPartitionNum",
-      sys.env.getOrElse("SPARK_GRAFT_MINPARTS",
-        (s.sparkContext.defaultParallelism * 2).toString))
-    sys.env.get("SPARK_GRAFT_MAXPART").foreach(v =>
-      s.conf.set("spark.sql.files.maxPartitionBytes", v))
+      (s.sparkContext.defaultParallelism * 2).toString)
     // every read and write of the run, in tasks and on the calling
     // thread, uses the local FS that sets permissions without forking
     // `chmod`; the JVM's FS cache holds the stock instance, so this

@@ -8,6 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.GraftShim
 
+import graft.GraftSession
 import graft.queries.{LlmOps, MahjongAnalytics}
 
 /** Times calls in small mode (what [[Pipeline.executionMode]] sets below
@@ -57,11 +58,7 @@ object ReportModeProbe {
     val steps = rest(1).split(",").map(_.toInt)
     val rounds = if (rest.length > 2) rest(2).toInt else 6
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (llm) steps.foreach { n =>
       val dir = work.resolve(s"llm-$n")

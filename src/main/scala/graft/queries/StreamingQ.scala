@@ -185,30 +185,34 @@ object StreamingQ {
     * coarser [[qStreamStateInspect]]/[[qStreamWindowDistinct]] replays
     * already rely on), so the grouped admission keeps the multi-batch
     * RocksDB merge path live while paying per-commit cost 3× less —
-    * the r17 SessProbe matrix measured per-batch fixed cost
-    * (walCommit/offsets/planning + store commit) as ~40% of this key.
+    * the r17 per-micro-batch `durationMs` breakdown measured per-batch
+    * fixed cost (walCommit/offsets/planning + store commit) as ~40% of
+    * this key (OPTIMIZATION_r18.md).
     */
   val qStreamSession: Q = (s, d) =>
     // fed by the DISTRIBUTED week-file replay (executors read the
     // batches; the driver only admits files) — the far-future sentinel
     // is in the last trigger, so every real session finalizes exactly
     // as in the one-file-per-batch form and the oracle hash is
-    // unchanged (verified: identical 95k-row output across 1/3/6
-    // files-per-trigger in the r17 probe)
+    // unchanged (StreamingSpec runs this build at 1 and 3 files per
+    // trigger, on 1 and 8 state stores, and gets this key's rows)
     runFileReplayStream(s, "graft_stream_session", d,
                         filesPerTrigger = 3,
                         rowsPerStatePartition = 12500L,
-                        confs = RocksDbConfs) { df =>
-      df.withWatermark("ts", "30 minutes")
-        .groupBy(col("user_id"),
-                 session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("cnt"),
-             sum(col("value").cast(DecimalType(18, 2))).cast("double")
-               .as("sum_value"))
-        .select(col("user_id"), col("w.start").as("session_start"),
-                col("cnt"), col("sum_value"))
-    }.where(col("user_id") =!= -1L)
+                        confs = RocksDbConfs)(sessionWindows)
+      .where(col("user_id") =!= -1L)
       .orderBy("user_id", "session_start")
+
+  /** q_stream_session's stream: 30-minute session windows per user. */
+  private[graft] def sessionWindows(df: DataFrame): DataFrame =
+    df.withWatermark("ts", "30 minutes")
+      .groupBy(col("user_id"),
+               session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("cnt"),
+           sum(col("value").cast(DecimalType(18, 2))).cast("double")
+             .as("sum_value"))
+      .select(col("user_id"), col("w.start").as("session_start"),
+              col("cnt"), col("sum_value"))
 
   /** TRUE streaming COUNT(DISTINCT) — two CHAINED stateful windowed
     * aggregations (Spark 4's multiple-stateful-operator support, which
@@ -307,10 +311,10 @@ object StreamingQ {
     *  - no checksum companion per checkpoint file (offsets, commits, state
     *    deltas): 2x the metadata file ops for files no restart reads,
     *    ~20% of every streaming key's wall time at sf0.1
-    *    (StreamFixedCostProbe, OPTIMIZATION_r18.md), identical rows;
+    *    (OPTIMIZATION_r18.md), identical rows;
     *  - checkpoint files written through java.nio, not Hadoop's
     *    FileContext, whose local create forks a `chmod` per file without
-    *    libhadoop (~89 ms vs 0.3 ms, CkptFsProbe;
+    *    libhadoop (~89 ms vs 0.3 ms per file, OPTIMIZATION_r18.md;
     *    [[graft.streaming.NioCheckpointFileManager]]).
     */
   private[graft] val EphemeralCkptConfs: Seq[(String, String)] = Seq(
@@ -521,11 +525,12 @@ object StreamingQ {
     * results into a memory sink named `name`. Runs on a
     * [[replaySession]] with `confs`, as [[runReplayStreams]] does.
     */
-  private def runFileReplayStream(s: SparkSession, name: String, d: String,
-                                  filesPerTrigger: Int = 1,
-                                  rowsPerStatePartition: Long = 100000L,
-                                  confs: Seq[(String, String)] = Nil)
-                                 (build: DataFrame => DataFrame): DataFrame =
+  private[graft] def runFileReplayStream(s: SparkSession, name: String,
+                                         d: String,
+                                         filesPerTrigger: Int = 1,
+                                         rowsPerStatePartition: Long = 100000L,
+                                         confs: Seq[(String, String)] = Nil)
+                                        (build: DataFrame => DataFrame): DataFrame =
     runFileReplayStreamsN(s, name, d, filesPerTrigger, 1,
                           rowsPerStatePartition, confs)(dfs => build(dfs.head))
 
@@ -564,12 +569,14 @@ object StreamingQ {
     // the block (OPTIMIZATION_r18.md); the session-window key opts into
     // denser stores because its per-batch state merge is the one
     // stateful stage heavy enough for 2 stores to serialize a 32-core
-    // box (SessProbe matrix: 8 stores ×1.4 at 3 files/trigger).
-    // Output invariance to the store count is pinned by the manual
-    // SessProbe/oracle verification (1/3/6-fpt identical outputs) plus
-    // the per-key oracle hashes — the ShuffleInvarianceSpec sweep
-    // varies the CALLER's count, which reaches the batch work on the
-    // stream's output but not this store count (r17 ADVICE).
+    // box (r17 store-count × files-per-trigger matrix,
+    // OPTIMIZATION_r18.md: 8 stores ×1.4 at 3 files/trigger).
+    // Output invariance to the store count is pinned by StreamingSpec,
+    // which runs the session-window build on 1 and on 8 stores and gets
+    // q_stream_session's rows both times, plus the per-key oracle
+    // hashes — the ShuffleInvarianceSpec sweep varies the CALLER's
+    // count, which reaches the batch work on the stream's output but
+    // not this store count.
     val c = replaySession(s, confs)
     runOnScratchCkpt(c, math.max(1, math.min(8, totalRows / rowsPerStatePartition)),
                      name) { ckpt =>

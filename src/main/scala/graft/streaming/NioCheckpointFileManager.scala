@@ -16,8 +16,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * checkpoint dir the per-batch floor is process-fork-bound, not
   * I/O-bound: measured on this box's tmpfs, FileContext
   * create+write+rename of a 300-byte metadata file costs 88.8 ms vs
-  * 0.27 ms through java.nio (CkptFsProbe), and walCommit+commitOffsets
-  * alone were ~100 ms of every micro-batch (StreamFixedCostProbe).
+  * 0.27 ms through java.nio, and walCommit+commitOffsets alone were
+  * ~100 ms of every micro-batch (OPTIMIZATION_r18.md;
+  * NioCheckpointFileManagerSpec checks the contract below).
   *
   * Scope: registered via `spark.sql.streaming.checkpointFileManagerClass`
   * ONLY on the per-call session clones that run the ephemeral local
@@ -34,7 +35,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *   FileAlreadyExistsException — HDFSMetadataLog distinguishes a lost
   *   concurrent-writer race by that exact type;
   * - reads/lists/deletes stay on the inherited FileContext paths (no
-  *   fork there — CkptFsProbe measured 0.8 ms/op).
+  *   fork there — measured at 0.8 ms/op).
   */
 class NioCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends AbstractFileContextBasedCheckpointFileManager(path, hadoopConf) {

@@ -667,6 +667,38 @@ class StreamingSpec extends AnyFunSuite {
       s"ts tie breaks to the higher event_id: ${out(3L)}")
   }
 
+  /** q_stream_session's rows depend neither on how the replay is cut into
+    * micro-batches nor on how many state stores hold the sessions: its
+    * session-window build, replayed at 1 file per trigger on 1 store and
+    * at 3 files per trigger on 8 stores (one per replay row, capped at
+    * 8), returns exactly the key's rows. The ShuffleInvarianceSpec sweep
+    * cannot show this: it varies the caller's partition count, and the
+    * replay sizes its stores from the replay volume. Each run tags its
+    * rows with the partition, i.e. the store, that emitted them, so the
+    * test also sees that the two runs really used 1 and several stores.
+    */
+  test("q_stream_session returns the same rows on 1 and on 8 state stores") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val sf = "/root/testdata/sf0.001"
+    val expected = StreamingQ.qStreamSession(spark, sf).collect().toSeq
+    assert(Tables.events(spark, sf).count() >= 8)
+    def replay(filesPerTrigger: Int, rowsPerStatePartition: Long) = {
+      val out = StreamingQ.runFileReplayStream(spark, s"graft_sess_stores_$filesPerTrigger",
+          sf, filesPerTrigger, rowsPerStatePartition, StreamingQ.RocksDbConfs) { df =>
+        StreamingQ.sessionWindows(df).withColumn("store", spark_partition_id())
+      }.where(col("user_id") =!= -1L)
+      (out.drop("store").orderBy("user_id", "session_start").collect().toSeq,
+       out.select("store").distinct().count())
+    }
+    val (oneStore, storesOfOne) = replay(1, Long.MaxValue)
+    val (eightStores, storesOfEight) = replay(3, 1L)
+    assert(storesOfOne == 1)
+    assert(storesOfEight > 1)
+    assert(expected.nonEmpty)
+    assert(oneStore == expected)
+    assert(eightStores == expected)
+  }
+
   /** A replay's confs go on its own clone: a caller's conf never holds
     * them, not even while the call runs. The session key writes both a
     * shuffle-partition count and the RocksDB provider, so a caller that
