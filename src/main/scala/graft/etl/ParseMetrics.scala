@@ -6,14 +6,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
 /** Observability for the lenient parse paths (typed `Pipeline.parseRaw`
-  * and the `mjlog` DSv2 reader): both skip a corrupt log instead of
-  * killing the job (the reference aborts the whole run on the first bad
-  * file — main.py:25-30), which at 100 TB means skipped files must be
-  * *countable*, not just grep-able from executor stderr. One named
-  * [[LongAccumulator]] per SparkContext surfaces the skip count in the
-  * Spark UI / status API for every stage that parses, shared by both
-  * paths so `spark.read.format("mjlog")` and the typed ETL report into
-  * the same counter.
+  * and the `mjlog` DSv2 reader, batch `read` and micro-batch
+  * `readStream` alike, so `Pipeline.runV2` and `StreamingPipeline` too):
+  * each skips a corrupt log instead of killing the job (the reference
+  * aborts the whole run on the first bad file — main.py:25-30), which
+  * at 100 TB means skipped files must be *countable*, not just
+  * grep-able from executor stderr. One named [[LongAccumulator]] per
+  * SparkContext surfaces the skip count in the Spark UI / status API
+  * for every stage that parses, shared by every path so they all report
+  * into the same counter.
   */
 object ParseMetrics {
   private val cache = new ConcurrentHashMap[String, LongAccumulator]()

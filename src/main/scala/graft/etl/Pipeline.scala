@@ -1,16 +1,15 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
-import java.time.LocalDate
-import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.model.ParsedGame
+import graft.sources.MjlogTable
 
 /** Distributed mjlog ETL (reference E6–E13, main.py:18-33 +
   * scrape.py:612-668), Spark-first:
@@ -33,8 +32,6 @@ object Pipeline {
   val TableNames: Seq[String] = Seq(
     "games", "rules", "game_players", "game_scores", "kyokus",
     "haipais", "actions", "agaris", "nagares")
-
-  private val DirDate = DateTimeFormatter.ofPattern("yyyyMMdd")
 
   /** Raw file scan: (path, content) for every xml under
     * `<logDir>/<YYYYMMDD>/`. Split out so run() can read the listing's
@@ -60,14 +57,12 @@ object Pipeline {
     raw
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val m = "(\\d{8})/([^/]+)\\.xml$".r.findFirstMatchIn(path)
-        m.flatMap { mm =>
-          val dt = LocalDate.parse(mm.group(1), DirDate)
+        MjlogTable.parseName(path).flatMap { case (dt, gameId) =>
           // lenient per-file failure: at scale one corrupt log must not
           // kill the job — skip it and keep the task alive. (The
           // reference aborts the whole run on the first bad file.)
           try Some(MjlogParser.parse(new String(bytes, StandardCharsets.UTF_8),
-                                     mm.group(2), dt))
+                                     gameId, dt))
           catch {
             case e: Exception =>
               skipped.add(1L)
@@ -78,23 +73,30 @@ object Pipeline {
       }
   }
 
+  /** Deterministic kyoku ids: one shuffle, partitioned by dt. Split out so
+    * runImpl can cache it — five tables derive from it. `idBase` maps a
+    * `yyyy-MM-dd` date to the kyokus the lake already holds for it (an
+    * appending run's per-date high-water mark, [[existingSeq]]); that
+    * date's ids continue after them, so `kyokus` and its 4 child tables
+    * all inherit the shift.
+    */
+  def kyokusBase(parsed: Dataset[ParsedGame],
+                 idBase: Map[String, Long] = Map.empty): DataFrame = {
+    val w = Window.partitionBy(col("dt")).orderBy(col("game_id"), col("k.idx"))
+    val id = (datediff(col("dt"), to_date(lit("1970-01-01"))).cast("long") * 100000L) +
+      row_number().over(w) - 1
+    parsed.toDF()
+      .select(col("game_id"), col("dt"), explode(col("kyokus")).as("k"))
+      .withColumn("id",
+        if (idBase.isEmpty) id
+        else id + coalesce(element_at(typedLit(idBase), col("dt").cast("string")), lit(0L)))
+  }
+
   /** The 9 normalized tables from a parsed game Dataset. Kyoku ids follow
     * the reference's `days_since_epoch*100000 + seq` scheme
     * (scrape.py:447) but with a deterministic order (game_id, INIT index)
     * instead of directory iteration order (SURVEY.md §7.4.1).
     */
-  /** Deterministic kyoku ids: one shuffle, partitioned by dt. Exposed so
-    * run() can cache it — five tables derive from it.
-    */
-  def kyokusBase(parsed: Dataset[ParsedGame]): DataFrame = {
-    val w = Window.partitionBy(col("dt")).orderBy(col("game_id"), col("k.idx"))
-    parsed.toDF()
-      .select(col("game_id"), col("dt"), explode(col("kyokus")).as("k"))
-      .withColumn("id",
-        (datediff(col("dt"), to_date(lit("1970-01-01"))).cast("long") * 100000L) +
-          row_number().over(w) - 1)
-  }
-
   def tables(spark: SparkSession, parsed: Dataset[ParsedGame]): Map[String, DataFrame] =
     tables(parsed, kyokusBase(parsed))
 
@@ -241,12 +243,12 @@ object Pipeline {
     * (`<outDir>/<table>/dt=YYYY-MM-DD/...`, reference layout E11), in
     * the mode [[executionMode]] picks from the binaryFile scan's size.
     */
-  def run(spark: SparkSession, logDir: String, outDir: String): Unit =
-    runImpl(spark, outDir) { s =>
-      val raw = rawLogs(s, logDir)
-      executionMode(s, scanBytes(raw), SmallLogBytes)
-      parseRaw(s, raw)
-    }
+  def run(spark: SparkSession, logDir: String, outDir: String): Unit = {
+    val s = etlSession(spark)
+    val raw = rawLogs(s, logDir)
+    executionMode(s, scanBytes(raw), SmallLogBytes)
+    runImpl(parseRaw(s, raw), outDir, SaveMode.Overwrite)
+  }
 
   /** The same ETL sourced through the `mjlog` DataSource V2 instead of
     * the binaryFile scan + typed flatMap: one InputPartition per file,
@@ -254,11 +256,11 @@ object Pipeline {
     * the V2 path is held to the typed path's wall time. Always runs
     * with codegen: the measured V2 corpora are all ≥ 32 MB.
     */
-  def runV2(spark: SparkSession, logDir: String, outDir: String): Unit =
-    runImpl(spark, outDir) { s =>
-      import s.implicits._
-      s.read.format("mjlog").load(logDir).as[ParsedGame]
-    }
+  def runV2(spark: SparkSession, logDir: String, outDir: String): Unit = {
+    val s = etlSession(spark)
+    import s.implicits._
+    runImpl(s.read.format("mjlog").load(logDir).as[ParsedGame], outDir, SaveMode.Overwrite)
+  }
 
   /** The clone of `spark` an ETL run executes on. Every conf below goes
     * on the clone, so the caller's conf is never written and concurrent
@@ -294,20 +296,38 @@ object Pipeline {
     s
   }
 
-  private def runImpl(spark: SparkSession, outDir: String)
-                     (source: SparkSession => Dataset[ParsedGame]): Unit = {
-    val s = etlSession(spark)
+  /** Existing per-date kyoku counts in the lake (high-water marks). */
+  private def existingSeq(spark: SparkSession, outDir: String): Map[String, Long] =
+    if (!new java.io.File(s"$outDir/kyokus").exists()) Map.empty
+    else
+      // the declared schema types dt as DATE and needs no inference job
+      readTable(spark, outDir, "kyokus")
+        .groupBy(col("dt").cast("string").as("dt"))
+        .agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The one place the 9 tables are written, on `source`'s session (an
+    * [[etlSession]] clone, or the stream session Spark derives from
+    * one). `SaveMode.Overwrite` replaces the dt partitions the input
+    * covers (dynamic overwrite: the batch runs); `SaveMode.Append` adds
+    * to them, each date's kyoku ids continuing after the ones already
+    * written (a [[graft.streaming.StreamingPipeline]] micro-batch).
+    */
+  private[graft] def runImpl(source: Dataset[ParsedGame], outDir: String,
+                             mode: SaveMode): Unit = {
+    val idBase =
+      if (mode == SaveMode.Append) existingSeq(source.sparkSession, outDir)
+      else Map.empty[String, Long]
     // ONE dt-clustering shuffle for the whole pipeline: the id window
     // (partitionBy dt) reuses this partitioning instead of shuffling
     // again, and every projection stays narrow, so all 9 partitioned
     // writes inherit dt-clustered tasks (1 file per dt dir) with no
     // per-write repartition. At 100 TB: repartition(col("dt"),
     // col("game_id")) to spread a day over N tasks/files.
-    val parsed = source(s)
-      .repartition(col("dt")).cache()
+    val parsed = source.repartition(col("dt")).cache()
     // the window-ranked kyoku intermediate feeds 5 of the 9 tables —
     // cache it so the explode+window runs once, not five times
-    val kb = kyokusBase(parsed).cache()
+    val kb = kyokusBase(parsed, idBase).cache()
     try {
       // materialize both caches BEFORE forking the 9 writes: concurrent
       // jobs racing an unbuilt cache each recompute the partitions they
@@ -337,7 +357,7 @@ object Pipeline {
               // no repartition here: tasks are already dt-clustered by the
               // single upstream shuffle, so each dt= dir gets one file and
               // the commit protocol stays off the profile
-              .write.mode("overwrite").partitionBy("dt")
+              .write.mode(mode).partitionBy("dt")
               .parquet(s"$outDir/$name")
           }
         }

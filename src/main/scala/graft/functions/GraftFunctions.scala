@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions._
 
 import graft.codecs.{Melds, Tiles}
@@ -171,17 +171,24 @@ object GraftFunctions {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  /** Register every graft SQL function on a session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("graft_tiles",
-      (ids: Seq[Int], hasAka: Boolean) => Tiles.numToHai(ids, hasAka))
-    spark.udf.register("graft_dora",
-      (ids: Seq[Int]) => Tiles.doraFromIndicators(ids))
-    spark.udf.register("graft_meld_pais",
-      (m: Int, hasAka: Boolean) => Melds.decode(m, hasAka).map(_.pais).orNull)
-    spark.udf.register("graft_meld_type",
-      (m: Int, hasAka: Boolean) => Melds.decode(m, hasAka).map(_.atype).orNull)
-    spark.udf.register("graft_weighted_avg", udaf(new WeightedAvg))
-    spark.udf.register("graft_minhash_merge", udaf(new MinhashMerge))
-  }
+  /** The graft SQL functions, by name. */
+  private lazy val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "graft_tiles" ->
+      udf((ids: Seq[Int], hasAka: Boolean) => Tiles.numToHai(ids, hasAka)),
+    "graft_dora" -> udf((ids: Seq[Int]) => Tiles.doraFromIndicators(ids)),
+    "graft_meld_pais" ->
+      udf((m: Int, hasAka: Boolean) => Melds.decode(m, hasAka).map(_.pais).orNull),
+    "graft_meld_type" ->
+      udf((m: Int, hasAka: Boolean) => Melds.decode(m, hasAka).map(_.atype).orNull),
+    "graft_weighted_avg" -> udaf(new WeightedAvg),
+    "graft_minhash_merge" -> udaf(new MinhashMerge))
+
+  /** Register every graft SQL function the session lacks. A name it
+    * already has keeps its function: registering it again would replace
+    * it and log a WARN on every call.
+    */
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (name, f) =>
+      if (!spark.catalog.functionExists(name)) spark.udf.register(name, f)
+    }
 }

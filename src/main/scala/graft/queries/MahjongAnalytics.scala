@@ -182,9 +182,11 @@ object MahjongAnalytics {
   }
 
   /** The SAME corpus drained through the incremental path instead:
-    * `StreamingPipeline.runAvailable` (Trigger.AvailableNow file-source
-    * micro-batches, checkpointed offsets, per-batch id re-basing) into
-    * its own table dirs — seeded once per data dir like the batch run.
+    * `StreamingPipeline.runAvailable` (Trigger.AvailableNow micro-batches
+    * of the `mjlog` stream source, a checkpointed max-path watermark,
+    * each batch appended by the batch ETL's write core with its ids
+    * continuing each date's high-water mark) into its own table dirs —
+    * seeded once per data dir like the batch run.
     * The checkpoint lives INSIDE the output dir (keyed like the table
     * dirs, so repeated runs reuse it and nothing leaks in /tmp).
     */
@@ -509,7 +511,8 @@ object MahjongAnalytics {
     * sums stay far under 2^53, so even a float64 round-trip in the
     * compare harness is lossless; a DECIMAL(38,0) sum of wider words
     * was lossy there), and a single-row content change flips it
-    * (demonstrated by perturbation in MahjongStreamParitySpec). At
+    * (MahjongAnalyticsSpec `parity digest flips on a single perturbed
+    * row`). At
     * lake scale the words would widen to a decimal sum past ~2^31 rows
     * per dt; the gate corpus pins semantics, not volume.
     */
@@ -550,7 +553,9 @@ object MahjongAnalytics {
 
   /** Batch ≡ streaming parity, hash-gated — the same fixture corpus
     * run through `Pipeline.run` AND drained through the checkpointed
-    * `StreamingPipeline.runAvailable` micro-batch path, then compared
+    * `StreamingPipeline.runAvailable` micro-batch path (the `mjlog`
+    * stream source feeding the batch ETL's write core in append mode,
+    * where the batch run reads binaryFile and overwrites), then compared
     * per ingest date across ALL NINE tables: row counts plus an
     * order-independent md5-sum digest of each table's full row content
     * minus the re-based surrogate ids (ids are per-batch-rebased in
@@ -560,7 +565,8 @@ object MahjongAnalytics {
     * (hive_partitioning recovers dt), so the gate pins that the
     * incremental path writes byte-equivalent TABLE CONTENT — a
     * streaming bug that mangles one `actions.pais` value flips the
-    * digest (perturbation-demonstrated in MahjongStreamParitySpec).
+    * digest (MahjongAnalyticsSpec `parity digest flips on a single
+    * perturbed row`).
     *
     * At 100 TB: this is the reconciliation query a lambda-architecture
     * deployment runs after a backfill — two dt-pruned scans per table,

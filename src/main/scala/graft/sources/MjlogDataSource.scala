@@ -220,7 +220,7 @@ object MjlogListing {
     * never splits): KB-sized mjlogs would otherwise cost one task each
     * — 200k files = 200k task launches — so pack largest-first up to
     * maxSplitBytes, honoring the same session knobs the parquet scan
-    * uses (Pipeline.runImpl sets openCostInBytes=64k for mjlog corpora).
+    * uses (Pipeline.etlSession sets openCostInBytes=64k for mjlog corpora).
     */
   def pack(files: Array[MjlogFileSpec], openCost: Long, minParts: Int,
            maxPartitionBytes: Long): Array[InputPartition] = {

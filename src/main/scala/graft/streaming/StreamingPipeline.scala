@@ -1,112 +1,53 @@
 package graft.streaming
 
-import java.time.LocalDate
-import java.time.format.DateTimeFormatter
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.etl.{MjlogParser, Pipeline}
+import graft.etl.Pipeline
+import graft.model.ParsedGame
 
 /** Incremental form of the mjlog ETL (reference E13: per-date flush —
   * each date directory is conceptually one micro-batch).
   *
-  * Structured Streaming file source (text, wholetext) watches the log
-  * tree; each micro-batch parses its new files and *appends* to the same
-  * 9 Hive-partitioned tables the batch Pipeline writes. Kyoku-id
-  * continuity across batches follows the reference's per-date sequence:
-  * the batch's window ranks are shifted by the per-date high-water mark
-  * read from the existing `kyokus` output (cheap: footer-stat max over
-  * the dt partition).
+  * The `mjlog` stream source (`readStream.format("mjlog")`,
+  * [[graft.sources.MjlogMicroBatchStream]]) watches the log tree on an
+  * [[Pipeline.etlSession]] clone; each micro-batch's parsed games go to
+  * the batch ETL's own write core (`Pipeline.runImpl`), which *appends*
+  * them to the same 9 Hive-partitioned tables `Pipeline.run` writes.
+  * Lenient parse (a corrupt log is skipped and counted in
+  * `graft.mjlog.skippedFiles`), the ETL's pack knobs, the chmod-free
+  * local FS and the caller's untouched conf hold here because it is the
+  * batch core. Kyoku-id continuity across batches follows the
+  * reference's per-date sequence: each date's ids continue after the
+  * kyokus the lake already holds for it.
   *
-  * Scale notes: the file source tracks processed files in the
-  * checkpoint, giving exactly-once table appends through foreachBatch +
-  * idempotent dynamic partition overwrite is not needed since input
-  * files are immutable. State is bounded by the file-listing window
-  * (`maxFilesPerTrigger` at production scale).
+  * Exactly-once contract: the source's checkpointed offset is a
+  * max-path watermark, so each file is read once as long as new files
+  * land at paths after the committed watermark — the reference's daily
+  * layout (`<YYYYMMDD>/<id>.xml`, appended day by day) does. A file that
+  * lands below the watermark is never read: it is skipped, warned and
+  * counted in `graft.mjlog.backfilledFiles`. A checkpoint written by
+  * the earlier `text` file-source drain (a seen-files log) cannot be
+  * resumed by this source; drain into a fresh checkpoint and lake.
   */
 object StreamingPipeline {
 
-  private val DirDate = DateTimeFormatter.ofPattern("yyyyMMdd")
-
-  /** Existing per-date kyoku counts in the output (high-water marks). */
-  private def existingSeq(spark: SparkSession, outDir: String): Map[String, Long] = {
-    val path = new java.io.File(s"$outDir/kyokus")
-    if (!path.exists()) Map.empty
-    else {
-      // the declared schema types dt as DATE and needs no inference job
-      Pipeline.readTable(spark, outDir, "kyokus")
-        .groupBy(col("dt").cast("string").as("dt"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
-  }
-
-  /** Process one micro-batch of (path, xml) rows. */
-  private[streaming] def processBatch(spark: SparkSession, batch: DataFrame,
-                                      outDir: String): Unit = {
-    import spark.implicits._
-    val parsed = batch
-      .select(col("path"), col("value"))
-      .as[(String, String)]
-      .flatMap { case (path, xml) =>
-        "(\\d{8})/([^/]+)\\.xml$".r.findFirstMatchIn(path).map { m =>
-          MjlogParser.parse(xml, m.group(2), LocalDate.parse(m.group(1), DirDate))
-        }
-      }
-    if (parsed.isEmpty) return
-    val offsets = existingSeq(spark, outDir)
-    val offsetCol =
-      if (offsets.isEmpty) lit(0L)
-      else coalesce(element_at(typedLit(offsets), col("dt").cast("string")), lit(0L))
-    parsed.cache()
-    val kb = Pipeline.kyokusBase(parsed).cache()
-    val dts = Pipeline.tables(parsed, kb)
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val jobs = Pipeline.TableNames.map { name =>
-        Future {
-          val df = dts(name)
-          val shifted = name match {
-            case "kyokus" => df.withColumn("id", col("id") + offsetCol)
-            case "haipais" | "actions" | "agaris" | "nagares" =>
-              df.withColumn("kyoku_id", col("kyoku_id") + offsetCol)
-            case _ => df
-          }
-          shifted
-            .withColumn("dt", date_format(col("dt"), "yyyy-MM-dd"))
-            .repartition(col("dt"))
-            .write.mode("append").partitionBy("dt")
-            .parquet(s"$outDir/$name")
-        }
-      }
-      jobs.foreach(Await.result(_, Duration.Inf))
-    } finally { parsed.unpersist(); kb.unpersist() }
-  }
-
   /** Drain everything currently in logDir and stop (Trigger.AvailableNow
     * — the streaming analog of one reference ETL run). Subsequent calls
-    * only process files the checkpoint hasn't seen.
+    * only process files past the checkpoint's watermark.
     */
   def runAvailable(spark: SparkSession, logDir: String, outDir: String,
                    checkpointDir: String): Unit = {
-    val stream = spark.readStream
-      .format("text")
-      .option("wholetext", "true")
-      .option("pathGlobFilter", "*.xml")
-      .option("recursiveFileLookup", "true")
-      .load(logDir)
-      .select(col("_metadata.file_path").as("path"), col("value"))
-    val q = stream.writeStream
+    val s = Pipeline.etlSession(spark)
+    import s.implicits._
+    s.readStream.format("mjlog").load(logDir)
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(spark, batch, outDir)
+        Pipeline.runImpl(batch.as[ParsedGame], outDir, SaveMode.Append)
       }
       .start()
-    q.awaitTermination()
+      .awaitTermination()
   }
 }

@@ -7,6 +7,7 @@ import graft.functions.GraftFunctions
 /** SQL-registered codec UDFs + typed-Aggregator UDAF. */
 class FunctionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private val sf = "/root/testdata/sf0.001"
 
   test("codec UDFs evaluate through SQL") {
     GraftFunctions.register(spark)
@@ -24,6 +25,19 @@ class FunctionsSpec extends AnyFunSuite {
     assert(row.isNullAt(row.fieldIndex("nuki")))
   }
 
+  test("a second qUdfTiles call keeps the first call's graft_tiles builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    def builder = s.sessionState.functionRegistry
+      .lookupFunctionBuilder(FunctionIdentifier("graft_tiles"))
+    graft.queries.Extensions.qUdfTiles(s, sf)
+    val first = builder
+    assert(first.isDefined)
+    graft.queries.Extensions.qUdfTiles(s, sf)
+    assert(builder.exists(_ eq first.get),
+      "re-registering replaces the function and logs a WARN")
+  }
+
   test("minhash-merge UDAF takes elementwise minima per group") {
     GraftFunctions.register(spark)
     import spark.implicits._
@@ -38,7 +52,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("weighted-avg UDAF matches the exact decimal expression") {
     GraftFunctions.register(spark)
-    val df = Tables.lineitem(spark, "/root/testdata/sf0.001")
+    val df = Tables.lineitem(spark, sf)
     df.createOrReplaceTempView("li_udaf")
     val got = spark.sql(
       "SELECT graft_weighted_avg(l_extendedprice, l_quantity) FROM li_udaf")
@@ -81,7 +95,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("q_fn_regex: extracted clerk numbers reconcile with the join keys") {
     import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
     val rows = graft.queries.Funcs.qFnRegex(spark, sf).collect()
     assert(rows.map(_.getAs[String]("prio_word")).toSet ==
            Set("URGENT", "HIGH", "MEDIUM", "NOT SPECIFIED", "LOW"))
@@ -105,7 +118,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("q_fn_explode: outer semantics keep the null-array docs in bucket -1") {
     import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
     val rows = graft.queries.Funcs.qFnExplode(spark, sf).collect()
     val byBucket = rows.map(r =>
       r.getAs[Long]("bucket") -> r.getAs[Long]("n")).toMap
@@ -124,7 +136,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("q_fn_try: null accounting matches the raw predicates") {
-    val sf = "/root/testdata/sf0.001"
     val r = graft.queries.Funcs.qFnTry(spark, sf).collect()(0)
     val orders = Tables.orders(spark, sf)
       .select(org.apache.spark.sql.functions.col("o_orderkey"),

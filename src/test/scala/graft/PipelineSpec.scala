@@ -110,6 +110,16 @@ class PipelineSpec extends AnyFunSuite {
     val parsed = Pipeline.parseLogs(spark, log.toString)
     assert(parsed.count() == 1)
     assert(parsed.collect().head.game_id == "ok")
+    // the incremental path skips and counts it too, on its own clone
+    val skipped = graft.etl.ParseMetrics.skippedFiles(spark)
+    val before = (skipped.value, spark.conf.getAll)
+    val lake = Files.createTempDirectory("graft_corrupt_lake_").toString
+    StreamingPipeline.runAvailable(spark, log.toString, lake,
+      Files.createTempDirectory("graft_corrupt_ckpt_").toString)
+    assert(Pipeline.readTable(spark, lake, "games").select("id")
+      .collect().map(_.getString(0)).toSeq == Seq("ok"))
+    assert(skipped.value - before._1 == 1)
+    assert(spark.conf.getAll == before._2, "the drain wrote the caller's conf")
   }
 
   test("game_scores decimal points") {
